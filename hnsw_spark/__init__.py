@@ -62,6 +62,13 @@ DataFrame programs:
 
 __version__ = "0.1.0"
 
+from hnsw_spark import zipcache as _zipcache  # noqa: E402
+
+# inside a PySpark worker only: skip the per-task re-read of unchanged zip
+# archives (see hnsw_spark/zipcache.py); the driver is left untouched
+if _zipcache.in_pyspark_worker():
+    _zipcache.install()
+
 from hnsw_spark.functions.similarity import (  # noqa: E402
     cosine_similarity,
     dot_product,

@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 from hnsw_spark.functions.similarity import get_metric
 from hnsw_spark.operators.knn import (
     _RESULT_SCHEMA,
+    _local_topk,
     _score_block,
     _topk_window,
+    merge_local_topk,
 )
 
 
@@ -287,9 +289,10 @@ class IVFIndex:
           probing-queries) pair with one float64 gemm, and emits only the
           per-batch top-k per query — shuffle input is Q·n_probe·k rows,
           never the candidate set;
-        - the global window applies the exact (score desc, id asc) order,
-          with local_merge's NaN-as-inf transport encoding for zero-norm
-          cosine rows.
+        - ``merge_local_topk`` applies the exact (score desc, id asc)
+          order — a window for batches, a shuffle-free ordered limit for
+          one query — and decodes local_merge's NaN-as-inf transport
+          encoding for zero-norm cosine rows.
 
         At n_probe = n_lists this degenerates to exactly the local_merge
         exact plan (same kernel, same merge), which the DuckDB oracle pins.
@@ -337,11 +340,7 @@ class IVFIndex:
                     )
                     scores = _score_block(metric, qmat_l[qidx], bmat)
                     sel = np.where(np.isnan(scores), np.inf, scores)
-                    n = sel.shape[1]
-                    kk = min(kk_target, n)
-                    part = np.argpartition(-sel, kk - 1, axis=1)[:, :kk]
-                    rows = np.repeat(np.arange(len(qidx)), kk)
-                    cols = part.ravel()
+                    rows, cols = _local_topk(sel, ids, kk_target)
                     yield pd.DataFrame(
                         {
                             "query_id": ids_all[qidx][rows],
@@ -354,13 +353,7 @@ class IVFIndex:
             F.col("list_id").isin(sorted(by_list_np))
         ).select("list_id", "id", "vector")
         local = cand.mapInPandas(score_partition, schema=_RESULT_SCHEMA)
-        merged = _topk_window(local, shortlist_k)
-        return merged.withColumn(
-            "score",
-            F.when(
-                F.col("score") == float("inf"), F.lit(float("nan"))
-            ).otherwise(F.col("score")),
-        )
+        return merge_local_topk(local, shortlist_k, len(q_ids))
 
     def _maybe_rerank(
         self, shortlist: DataFrame, queries: DataFrame, k: int,

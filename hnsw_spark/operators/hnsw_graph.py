@@ -99,7 +99,9 @@ def _node_schema(salted: bool, store: str) -> str:
     return ("sub_id long, " + base) if salted else base
 
 
-def _with_salt(assigned: DataFrame, max_list_size: int) -> DataFrame:
+def _with_salt(
+    assigned: DataFrame, max_list_size: int
+) -> tuple[DataFrame, DataFrame]:
     """Adds ``sub_id`` = list_id · STRIDE + pmod(xxhash64(id), n_salts)
     with per-list n_salts = ⌈list_size / cap⌉ from a broadcast groupBy
     count (VERDICT r9 #5): the round-9 rank-round-robin salt planned a
@@ -1167,7 +1169,20 @@ def add_points(
                 | set(int(v) for v in touched_vals)
             )
     grown = HNSWIndex(index_df, index.centroids, metric, params)
-    if salted:
+    # the counts-derived fan-out map covers only non-NULL sub_ids, so hand it
+    # on only when no node can carry a NULL one: the base is fresh-built /
+    # grown with its own counts, or carried the save-time verified map, and
+    # every touched key was collected non-NULL.  Otherwise search keeps the
+    # distinct fallback, which also probes a NULL sub_id group.
+    base_null_free = index._salt_counts is not None or bool(
+        index.params.get("sub_ids")
+    )
+    if (
+        salted
+        and base_null_free
+        and touched_vals is not None
+        and all(v is not None for v in touched_vals)
+    ):
         # The grown per-list salt counts double as the fresh-index fan-out
         # map (see _with_salt / HNSWIndex._salt_counts).  ``totals`` covers
         # only lists that RECEIVED delta nodes; lists with only base nodes

@@ -17,7 +17,10 @@ Two physical strategies, same semantics:
   numpy score block per Arrow batch and keeps only the per-batch top-k per
   query, so the shuffle input collapses from Q×N rows to Q×k×(#batches);
   a final window over that reduced set yields the global top-k.  Scoring is
-  BLAS matmul (float64), never a per-row Python loop.
+  BLAS matmul (float64), never a per-row Python loop.  A one-query batch
+  merges with ``orderBy(...).limit(k)`` instead of the window: a
+  TakeOrderedAndProject in which each partition keeps its k best rows and
+  the driver merges them, with no exchange.
 
 Ties are broken by ascending id in both strategies so results are
 deterministic and oracle-comparable.
@@ -62,6 +65,54 @@ def _topk_window(scored: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .drop("rank")
     )
+
+
+def _local_topk(
+    sel: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row top-k of a (Q, N) selection-score block under the merge's
+    (score desc, id asc) order, as flat (row, col) index arrays with
+    ``min(k, N)`` entries per row.  ``argpartition`` picks arbitrarily among
+    scores tied at the k-th place, which can drop the lower id that the
+    global order keeps; rows whose k-th score ties past the cut are
+    re-selected exactly (rare: only exact score ties reach that loop)."""
+    nq, n = sel.shape
+    kk = min(k, n)
+    part = np.argpartition(-sel, kk - 1, axis=1)[:, :kk]
+    picked = np.take_along_axis(sel, part, axis=1)
+    kth = picked.min(axis=1, keepdims=True)
+    straddling = np.flatnonzero(
+        (sel == kth).sum(axis=1) > (picked == kth).sum(axis=1)
+    )
+    for r in straddling:
+        above = np.flatnonzero(sel[r] > kth[r, 0])
+        tied = np.flatnonzero(sel[r] == kth[r, 0])
+        tied = tied[np.argsort(ids[tied], kind="stable")]
+        part[r] = np.concatenate([above, tied[: kk - len(above)]])
+    return np.repeat(np.arange(nq), kk), part.ravel()
+
+
+def merge_local_topk(local: DataFrame, k: int, n_queries: int) -> DataFrame:
+    """Global top-k over per-batch candidates (``query_id, id, score``)
+    emitted with the NaN-as-+inf transport encoding (see
+    ``knn_local_merge_prepared``), decoded back to NaN here.
+
+    One query needs no per-query partitioning: ``orderBy(...).limit(k)``
+    plans as a TakeOrderedAndProject (each partition keeps its top k, the
+    driver merges them), so a collected one-query search runs no exchange.
+    Batches keep the query-keyed ``_topk_window``."""
+    decoded = (
+        F.when(F.col("score") == float("inf"), F.lit(float("nan")))
+        .otherwise(F.col("score"))
+        .alias("score")
+    )
+    if n_queries == 1:
+        return (
+            local.orderBy(F.desc("score"), F.asc("id"))
+            .select("query_id", "id", decoded)
+            .limit(k)
+        )
+    return _topk_window(local, k).select("query_id", "id", decoded)
 
 
 def knn_exact(
@@ -171,30 +222,24 @@ def knn_local_merge_prepared(
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids_l, qmat_l = bq.value
-        nq = len(q_ids_l)
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = pdf["id"].to_numpy()
             bmat = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()), dtype=np.float64)
             scores = _score_block(metric, qmat_l, bmat)  # (Q, N)
-            n = scores.shape[1]
-            kk = min(k, n)
             # NaN (zero-norm cosine) must rank HIGHEST to match Catalyst's
             # sort order (Spark treats NaN as the largest double; numpy's
-            # argpartition would instead sort it last) — selection uses +inf,
-            # the emitted score stays NaN.
+            # argpartition would instead sort it last) — selection uses +inf.
             sel = np.where(np.isnan(scores), np.inf, scores)
-            # per-query local top-k: argpartition; the global window applies
-            # the exact (score desc, id asc) order.  The emitted score uses
-            # the +inf encoding too: pandas→Arrow turns NaN into NULL (which
+            # per-query local top-k; the global merge applies the exact
+            # (score desc, id asc) order.  The emitted score uses the +inf
+            # encoding too: pandas→Arrow turns NaN into NULL (which
             # desc-sorts LAST, silently dropping the row) — +inf survives the
             # boundary, sorts exactly where Catalyst puts NaN (largest), and
             # is unattainable for cosine/euclidean-similarity, so it is
             # decoded back to NaN after the merge.
-            part = np.argpartition(-sel, kk - 1, axis=1)[:, :kk]
-            rows = np.repeat(np.arange(nq), kk)
-            cols = part.ravel()
+            rows, cols = _local_topk(sel, ids, k)
             yield pd.DataFrame(
                 {
                     "query_id": q_ids_l[rows],
@@ -207,14 +252,7 @@ def knn_local_merge_prepared(
         F.col(base_id).cast("long").alias("id"), F.col(base_vec).alias("v")
     )
     local = b.mapInPandas(score_partition, schema=_RESULT_SCHEMA)
-    merged = _topk_window(local, k)
-    # decode the NaN-as-inf transport encoding (see score_partition note)
-    return merged.withColumn(
-        "score",
-        F.when(F.col("score") == float("inf"), F.lit(float("nan"))).otherwise(
-            F.col("score")
-        ),
-    )
+    return merge_local_topk(local, k, len(q_ids))
 
 
 def similarity_scores(

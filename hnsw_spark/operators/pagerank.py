@@ -45,7 +45,8 @@ def pagerank(
     checkpoint/resume for long chains, and it lets a convergence probe
     run "one more iteration" without recomputing the chain.
 
-    ``snapshots`` — an ascending sequence of iteration counts — returns a
+    ``snapshots`` — a strictly increasing sequence of iteration counts
+    (anything else raises ``ValueError``) — returns a
     LIST of rank frames (each localCheckpointed), one per requested count,
     computed on ONE chain: the graph setup (node set, degree weights,
     dangling check) runs once instead of once per probe call, and the
@@ -57,10 +58,14 @@ def pagerank(
 
     Returns DataFrame[id, rank] (one row per node appearing as src or dst).
     """
-    snaps = sorted(int(s) for s in snapshots) if snapshots is not None else None
+    snaps = [int(s) for s in snapshots] if snapshots is not None else None
     if snaps is not None:
         if not snaps or snaps[0] < 1:
             raise ValueError(f"snapshots must be positive iteration counts: {snapshots}")
+        # one frame per entry: a duplicate would return fewer frames than
+        # requested, and a reordered input would silently permute them
+        if any(a >= b for a, b in zip(snaps, snaps[1:])):
+            raise ValueError(f"snapshots must be strictly increasing: {snapshots}")
         n_iter = snaps[-1]
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # LAZY localCheckpoint: the count below materializes it — one job for
@@ -76,8 +81,10 @@ def pagerank(
         empty = nodes.withColumn("rank", F.lit(0.0))
         return [empty for _ in snaps] if snaps is not None else empty
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # lazy: materialized by the first job that consumes it (the dangling
-    # count below), then reused by every iteration
+    # lazy: materialized by the first action over the rank chain (the first
+    # iteration's dangling-mass job or its eager rank checkpoint — the
+    # dangling count below reads nodes/out_deg, not this frame), then
+    # reused by every iteration
     weighted = (
         e.join(out_deg, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))

@@ -31,7 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_spark.streaming.sketch import _partition_versions, _read_or_none
+from hnsw_spark.streaming.sketch import (
+    _partition_versions,
+    _prune_versions,
+    _read_or_none,
+)
 
 
 class StreamingTargetEncoder:
@@ -175,33 +179,13 @@ class StreamingTargetEncoder:
 
     def _drop_old_versions(self, epoch_id: int) -> None:
         """Keep this epoch's version AND its actual surviving prior (the
-        newest version strictly below epoch_id) — NOT a numeric
+        newest committed version strictly below epoch_id) — NOT a numeric
         ``>= epoch_id - 1`` window: empty micro-batches write no version,
         so the latest epoch's true prior can sit any distance below it,
         and pruning by number would delete exactly the state a legitimate
         foreachBatch retry of the latest epoch needs (the replay guard
-        would then kill the stream on every restart).  Local-path best
-        effort — object stores would use lifecycle rules."""
-        import os
-        import shutil
-
-        if not os.path.isdir(self.stats_path):
-            return
-        versions = []
-        for d in os.listdir(self.stats_path):
-            if d.startswith("_v="):
-                try:
-                    versions.append(int(d[3:]))
-                except ValueError:
-                    pass
-        priors = [v for v in versions if v < epoch_id]
-        keep = {epoch_id} | ({max(priors)} if priors else set())
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(self.stats_path, f"_v={v}"),
-                    ignore_errors=True,
-                )
+        would then kill the stream on every restart)."""
+        _prune_versions(self.stats_path, "_v=", epoch_id, keep_newer=False)
 
     def encode(self, rows: DataFrame, row_in_stats: bool = True) -> DataFrame:
         """Adds ``out_col`` to ``rows`` from the LIVE streamed stats —

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from hnsw_spark.streaming.sketch import (
     _partition_versions,
+    _prune_versions,
     _read_or_empty,
     _read_or_none,
 )
@@ -176,23 +177,11 @@ class StreamingTrailingFeatures:
         self._drop_old_tails(spark, int(epoch_id))
 
     def _drop_old_tails(self, spark, epoch_id: int) -> None:
-        """Keep versions >= epoch_id - 1 (the replay window); local-path
-        best effort — object stores would use lifecycle rules."""
-        import os
-        import shutil
-
-        if not os.path.isdir(self.tail_path):
-            return
-        for d in os.listdir(self.tail_path):
-            if d.startswith("_v="):
-                try:
-                    if int(d[3:]) < epoch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(self.tail_path, d),
-                            ignore_errors=True,
-                        )
-                except ValueError:
-                    pass
+        """Keep this epoch's tail, every newer one, and its actual prior
+        (the newest committed version below epoch_id, the tail a retry of
+        this epoch reads) — not a numeric ``>= epoch_id - 1`` window, which
+        deleted that prior whenever empty micro-batches left a gap."""
+        _prune_versions(self.tail_path, "_v=", epoch_id, keep_newer=True)
 
     def start(self, stream: DataFrame, checkpoint: str):
         return (

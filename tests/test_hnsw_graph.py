@@ -1011,6 +1011,42 @@ def test_salted_sub_map_params_fast_path_parity(spark, embeddings, tmp_path):
     assert pairs(grown) == exact_grown
 
 
+def test_salted_insert_keeps_null_sub_id_node_searchable(spark, embeddings):
+    """A base whose node table may hold a NULL sub_id (no
+    build counts, no verified save-time map) must not hand the grown index
+    a counts-derived fan-out map — that map lists only non-NULL sub_ids, so
+    search would silently skip the NULL node; the distinct fallback probes
+    its group."""
+    from hnsw_spark.operators.hnsw_graph import HNSWIndex, add_points
+
+    base = embeddings.filter(F.col("vec_id") < 300)
+    built = build_hnsw_index(
+        base, n_lists=4, m=8, ef_construction=32, max_level=0,
+        max_list_size=40, seed=7,
+    )
+    orphan = 7
+    nulled = built.index_df.withColumn(
+        "sub_id",
+        F.when(F.col("id") == orphan, F.lit(None).cast("long")).otherwise(
+            F.col("sub_id")
+        ),
+    )
+    holder = HNSWIndex(nulled, built.centroids, built.metric, dict(built.params))
+    delta = embeddings.filter(
+        (F.col("vec_id") >= 300) & (F.col("vec_id") < 330)
+    )
+    grown = add_points(holder, delta)
+    assert grown._salt_counts is None
+    q = embeddings.filter(F.col("vec_id") == orphan)
+    got = [
+        r.id
+        for r in grown.search(
+            q, k=5, n_probe=4, ef_search=1 << 20, dispatch="beam"
+        ).collect()
+    ]
+    assert orphan in got
+
+
 def test_salted_fresh_build_counts_map_parity(spark, embeddings):
     """VERDICT r13 #7: a FRESH never-saved salted index derives its search
     fan-out map from the build's own per-list salt counts

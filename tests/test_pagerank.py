@@ -65,6 +65,15 @@ def test_pagerank_snapshots_validation_and_empty(spark):
     assert [s.count() for s in snaps] == [0, 0]
 
 
+def test_pagerank_snapshots_must_be_strictly_increasing(spark):
+    """A duplicate used to return fewer frames than requested, and a
+    reordered input was silently sorted, permuting the returned frames."""
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    for bad in ((3, 3), (4, 2), (2, 5, 5), (5, 3, 7)):
+        with pytest.raises(ValueError, match="strictly increasing"):
+            pagerank(df, snapshots=bad)
+
+
 def test_embedding_outliers_flags_planted_point(spark):
     from hnsw_spark.operators.curation import embedding_outliers
 

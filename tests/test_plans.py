@@ -9,6 +9,7 @@ Plan-only: nothing executes, so the whole module is cheap."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from hnsw_spark.plans.audit import plan_facts
 from hnsw_spark.registry import QUERIES, load_all_queries
@@ -316,3 +317,85 @@ def test_scd2_enrichment_broadcasts_dim_no_fact_shuffle(spark):
     # the only exchanges are the dimension build's key window; the fact
     # scan feeds the join directly
     assert f.shuffles <= 2
+
+
+def _tied_corpus(spark):
+    """Integer-valued 8-d vectors: every dot product and squared norm is
+    exact in float64, so the BLAS kernel and the Catalyst window plan give
+    bit-identical scores and ties are real ties.  Holds one zero-norm row
+    (cosine NaN, ranked first by Spark) and copies of the query's 10th-best
+    vector under a lower and a higher id, so the score at place 10 is tied
+    past the cut."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vecs = rng.integers(-3, 4, size=(240, 8)).astype(float)
+    ids = np.arange(100, 340)
+    vecs[17] = 0.0
+    q = np.array([3.0, 1.0, -2.0, 0.0, 2.0, 1.0, -1.0, 3.0])
+    with np.errstate(invalid="ignore"):
+        cos = (vecs @ q) / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(q))
+    cos[17] = np.inf  # NaN places first under the (score desc, id asc) order
+    order = np.lexsort((ids, -cos))
+    tenth = vecs[order[9]]
+    vecs = np.vstack([vecs, tenth, tenth])
+    ids = np.concatenate([ids, [5, 900]])
+    rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame(
+        [(1, [float(x) for x in q]), (2, [float(x) for x in -q])],
+        "vec_id long, embedding array<float>",
+    )
+    return corpus, queries
+
+
+def _rows(df):
+    import math
+
+    return [
+        (r.query_id, r.id, "nan" if math.isnan(r.score) else r.score)
+        for r in df.orderBy("query_id", F.desc("score"), "id").collect()
+    ]
+
+
+def test_one_query_knn_merges_without_exchange(spark, tmp_path):
+    """A one-query search through local_merge, the IVF BLAS path and the
+    HNSW auto route merges with an ordered limit (TakeOrderedAndProject:
+    per-partition top k, merged on the driver) — no Exchange — and returns
+    exactly the window plan's rows, tied 10th score and NaN row included.
+    Two queries keep the query-keyed window."""
+    from hnsw_spark.operators.ann import build_ivf_index
+    from hnsw_spark.operators.hnsw_graph import build_hnsw_index
+    from hnsw_spark.operators.knn import knn_exact
+    from hnsw_spark.plans.persistence import load_index, save_index
+
+    corpus, queries = _tied_corpus(spark)
+    q1 = queries.filter(F.col("vec_id") == 1)
+    want = _rows(knn_exact(corpus, q1, k=10, strategy="window"))
+    wide = _rows(knn_exact(corpus, q1, k=11, strategy="window"))
+    assert wide[9][2] == wide[10][2]  # the 10th score is tied past the cut
+    assert want[0][2] == "nan" and [r[1] for r in want].count(5) == 1
+    want2 = _rows(knn_exact(corpus, queries, k=10, strategy="window"))
+
+    save_index(build_ivf_index(corpus, n_lists=4, seed=3), str(tmp_path / "ivf"))
+    ivf = load_index(spark, str(tmp_path / "ivf"))
+    save_index(
+        build_hnsw_index(corpus, n_lists=2, m=8, ef_construction=32),
+        str(tmp_path / "hnsw"),
+    )
+    hnsw = load_index(spark, str(tmp_path / "hnsw"))
+    searches = {
+        "local_merge": lambda q: knn_exact(corpus, q, k=10, strategy="local_merge"),
+        "ivf": lambda q: ivf.search(q, k=10, n_probe=4),
+        "hnsw_auto": lambda q: hnsw.search(q, k=10),
+    }
+    for name, search in searches.items():
+        one = search(q1)
+        f = plan_facts(one)
+        assert f.shuffles == 0, (name, f.ops)
+        assert "TakeOrderedAndProject" in f.ops, (name, f.ops)
+        assert _rows(one) == want, name
+        two = search(queries)
+        f2 = plan_facts(two)
+        assert "Window" in f2.ops and f2.shuffles >= 1, (name, f2.ops)
+        assert _rows(two) == want2, name

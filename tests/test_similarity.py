@@ -153,3 +153,24 @@ def test_local_merge_empty_query_batch(spark, sequential5):
         res = knn_exact(sequential5, empty_q, k=5, strategy=strat)
         assert res.count() == 0
         assert res.columns == ["query_id", "id", "score"]
+
+
+def test_local_topk_keeps_lowest_ids_among_tied_scores():
+    """The per-batch top-k must pick tied k-th scores by ascending id (the
+    global merge's order); argpartition alone picks among them arbitrarily,
+    which let local_merge drop a row the window plan keeps."""
+    import numpy as np
+
+    from hnsw_spark.operators.knn import _local_topk
+
+    rng = np.random.default_rng(0)
+    for _ in range(50):
+        sel = rng.integers(0, 4, size=(3, 30)).astype(float)
+        ids = rng.permutation(1000)[:30]
+        rows, cols = _local_topk(sel, ids, 7)
+        assert len(rows) == 3 * 7
+        for r in range(3):
+            want = np.lexsort((ids, -sel[r]))[:7]
+            assert sorted(cols[rows == r]) == sorted(want)
+    rows, cols = _local_topk(np.array([[1.0, 2.0]]), np.array([4, 9]), 5)
+    assert sorted(cols) == [0, 1]  # k above the batch size keeps it whole

@@ -107,6 +107,25 @@ def test_latest_epoch_replay_survives_empty_epoch_gap(spark, tmp_stats):
     assert got == want
 
 
+def test_prune_keeps_real_prior_past_stray_empty_version(spark, tmp_stats):
+    """A stray empty ``_v=N`` between the real prior and the live epoch
+    must not pose as the prior: the prune used to keep it and delete the
+    real prior, so a retry of the latest epoch rebuilt the state from its
+    batch alone."""
+    df = spark.createDataFrame(_ROWS, _SCHEMA)
+    ste = StreamingTargetEncoder(tmp_stats, "cat", "y", alpha=5, scale=4)
+    first = df.filter(F.col("row_id") <= 4)
+    rest = df.filter(F.col("row_id") > 4)
+    ste.process_batch(first, 0)
+    os.makedirs(os.path.join(tmp_stats, "_v=1"))  # crash shape: no data
+    ste.process_batch(rest, 2)
+    assert os.path.isdir(os.path.join(tmp_stats, "_v=0"))
+    ste.process_batch(rest, 2)  # the retry reads version 0 as its prior
+    got = _encoded(ste.encode(df))
+    want = _encoded(target_encode_loo(df, "cat", "y", alpha=5, scale=4))
+    assert got == want
+
+
 def test_serving_frame_without_label_column(spark, tmp_stats):
     """Code-review r11: row_in_stats=False never reads the target, so an
     UNLABELED serving frame (no label column at all) must encode."""

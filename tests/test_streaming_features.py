@@ -69,6 +69,34 @@ def test_stream_epochs_with_replay_equal_batch(spark, events, tmp_path):
     assert (hw - oldest).total_seconds() <= 86400
 
 
+def test_prune_keeps_real_prior_tail_past_stray_empty_version(
+    spark, events, tmp_path
+):
+    """A stray empty tail ``_v=N`` (crash shape) must not decide which
+    prior tail survives: the epoch-2 prune used to keep only versions
+    >= 1 and delete tail 0, the real prior a retry of epoch 2 reads."""
+    import os
+
+    stf = StreamingTrailingFeatures(
+        str(tmp_path / "out"), str(tmp_path / "tail"),
+        horizons_s=[3600, 86400], scale=4,
+    )
+    b0 = "2024-01-11 00:00:00"
+    stf.process_batch(events.filter(F.col("ts") < b0), 0)
+    os.makedirs(str(tmp_path / "tail" / "_v=1"))
+    later = events.filter(F.col("ts") >= b0)
+    stf.process_batch(later, 2)
+    assert (tmp_path / "tail" / "_v=0").is_dir()
+    stf.process_batch(later, 2)  # retry: must see tail 0 as its prior
+    got = {
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "out"))
+        .select(*FEATS)
+        .collect()
+    }
+    assert got == _batch_truth(events)
+
+
 def test_single_epoch_equals_batch(spark, events, tmp_path):
     # one epoch == plain batch backfill (no tail exists yet)
     stf = StreamingTrailingFeatures(
