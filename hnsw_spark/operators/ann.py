@@ -32,11 +32,16 @@ from pyspark.sql import functions as F
 from hnsw_spark.functions.similarity import get_metric
 from hnsw_spark.operators.knn import (
     _RESULT_SCHEMA,
-    _local_topk,
-    _score_block,
+    _batch_topk,
     _topk_window,
     merge_local_topk,
 )
+
+# Largest query batch collected to the driver: route_probes routes up to
+# this many queries driver-side, IVFIndex's BLAS scorer and HNSWIndex's
+# auto dispatch serve up to this many; a larger batch takes the
+# distributed path (one limit-probe decides, no count job).
+_MAX_DRIVER_BATCH = 1 << 16
 
 
 def _route_matrix(
@@ -64,14 +69,13 @@ def route_probes(
     n_probe: int,
     query_id: str = "vec_id",
     query_vec: str = "embedding",
-    max_driver_batch: int = 65536,
 ) -> DataFrame:
     """Route each query to its ``n_probe`` nearest centroids (the Spark
     analogue of the reference's upper-layer descent, src/main.ts:262-265).
     Returns DataFrame[(query_id, list_id, qvec)] — Q × n_probe rows.
 
     Two physical paths behind one contract: batches up to
-    ``max_driver_batch`` rows route driver-side (one numpy argsort against
+    ``_MAX_DRIVER_BATCH`` rows route driver-side (one numpy argsort against
     the tiny centroid matrix) and come back broadcast-hinted, so the probe
     join never shuffles the corpus; anything larger routes distributed via
     ``multi_probe_assign`` (broadcast centroids, vectorized mapInPandas), so
@@ -82,12 +86,12 @@ def route_probes(
         F.col(query_id).cast("long").alias("query_id"),
         F.col(query_vec).alias("v"),
     )
-    qpd = q.limit(max_driver_batch + 1).toPandas()
+    qpd = q.limit(_MAX_DRIVER_BATCH + 1).toPandas()
     if qpd.empty:
         return spark.createDataFrame(
             [], "query_id long, list_id int, qvec array<float>"
         )
-    if len(qpd) > max_driver_batch:
+    if len(qpd) > _MAX_DRIVER_BATCH:
         assigned = multi_probe_assign(
             q.select(F.col("query_id").alias("id"), F.col("v").alias("vector")),
             centroids,
@@ -274,11 +278,10 @@ class IVFIndex:
         n_probe: int,
         query_id: str,
         query_vec: str,
-        max_driver_batch: int = 65536,
     ) -> DataFrame | None:
         """Probed top-``shortlist_k`` for the float32 store via the same
-        vectorized kernel as ``knn_exact(strategy='local_merge')``
-        (knn.py:_score_block), restricted to the probed lists:
+        vectorized per-batch scorer as ``knn_exact(strategy='local_merge')``
+        (knn.py:_batch_topk), restricted to the probed lists:
 
         - queries route driver-side against the tiny centroid matrix and
           ship to executors as ONE broadcast (ids, matrix, list→query map);
@@ -298,18 +301,16 @@ class IVFIndex:
         exact plan (same kernel, same merge), which the DuckDB oracle pins.
         Returns None for over-limit batches — the caller falls back to the
         distributed join path."""
-        import pandas as pd
-
         spark = queries.sparkSession
         qpd = (
             queries.select(
                 F.col(query_id).cast("long").alias("query_id"),
                 F.col(query_vec).alias("v"),
             )
-            .limit(max_driver_batch + 1)
+            .limit(_MAX_DRIVER_BATCH + 1)
             .toPandas()
         )
-        if len(qpd) > max_driver_batch:
+        if len(qpd) > _MAX_DRIVER_BATCH:
             return None
         if qpd.empty:
             return spark.createDataFrame([], _RESULT_SCHEMA)
@@ -334,19 +335,9 @@ class IVFIndex:
                     qidx = lists_l.get(int(lid))
                     if qidx is None:
                         continue
-                    ids = grp["id"].to_numpy()
-                    bmat = np.ascontiguousarray(
-                        np.stack(grp["vector"].to_numpy()), dtype=np.float64
-                    )
-                    scores = _score_block(metric, qmat_l[qidx], bmat)
-                    sel = np.where(np.isnan(scores), np.inf, scores)
-                    rows, cols = _local_topk(sel, ids, kk_target)
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_all[qidx][rows],
-                            "id": ids[cols],
-                            "score": sel[rows, cols],
-                        }
+                    yield _batch_topk(
+                        metric, ids_all[qidx], qmat_l[qidx],
+                        grp["id"].to_numpy(), grp["vector"], kk_target,
                     )
 
         cand = self.index_df.filter(

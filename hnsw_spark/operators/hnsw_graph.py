@@ -54,11 +54,12 @@ import heapq
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hnsw_spark.functions.similarity import get_metric
 from hnsw_spark.operators.ann import (
+    _MAX_DRIVER_BATCH,
     assign_lists,
     route_probes,
     train_centroids,
@@ -99,6 +100,27 @@ def _node_schema(salted: bool, store: str) -> str:
     return ("sub_id long, " + base) if salted else base
 
 
+def _n_salts(count: Column, cap: int) -> Column:
+    """Per-list salt count ⌈count / cap⌉ as ``_n_salts`` — the one formula
+    the build (``_with_salt``) and insert (``add_points``) share."""
+    return F.ceil(count / F.lit(int(cap))).cast("long").alias("_n_salts")
+
+
+def _salt(assigned: DataFrame, counts: DataFrame) -> DataFrame:
+    """``sub_id`` = list_id · STRIDE + pmod(xxhash64(id), n_salts) from a
+    broadcast (list_id, _n_salts) frame.  Growth-stable insert depends on
+    build and insert salting through this one expression."""
+    return (
+        assigned.join(F.broadcast(counts), "list_id")
+        .withColumn(
+            "sub_id",
+            F.col("list_id").cast("long") * _SALT_STRIDE
+            + F.pmod(F.xxhash64(F.col("id")), F.col("_n_salts")),
+        )
+        .drop("_n_salts")
+    )
+
+
 def _with_salt(
     assigned: DataFrame, max_list_size: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -126,19 +148,9 @@ def _with_salt(
     # does not CSE shared subtrees)
     assigned = owned_persist(assigned)
     counts = assigned.groupBy("list_id").agg(
-        F.ceil(F.count("*") / F.lit(int(max_list_size)))
-        .cast("long")
-        .alias("_n_salts")
+        _n_salts(F.count("*"), max_list_size)
     )
-    salted = (
-        assigned.join(F.broadcast(counts), "list_id")
-        .withColumn(
-            "sub_id",
-            F.col("list_id").cast("long") * _SALT_STRIDE
-            + F.pmod(F.xxhash64(F.col("id")), F.col("_n_salts")),
-        )
-        .drop("_n_salts")
-    )
+    salted = _salt(assigned, counts)
     # counts is returned alongside: the per-list salt count IS the fan-out
     # map (sub_ids of list l = l·STRIDE + 0..n_salts-1, a superset of the
     # physically non-empty sub-lists, which search's fast path tolerates) —
@@ -413,12 +425,13 @@ def _search_layer_batched(
     time — the batching only amortizes the per-hop numpy dispatch across
     queries: one adjacency gather + ONE ``scores_pairs`` kernel per hop per
     list, instead of ~4 tiny numpy calls per (query, hop).  The einsum
-    kernel can differ from the sequential gemv by 1 ulp, so for candidates
-    near-tied at the ef boundary the retained SET may diverge by
-    boundary-score entries (ADVICE r8) — which is why the hash-checked
-    oracle path pins ``beam="sequential"`` and the parity test tolerates
+    row-dot can differ from ``_search_layer``'s gemv by 1 ulp, so for
+    candidates near-tied at the ef boundary the retained SET may diverge by
+    boundary-score entries (ADVICE r8); the parity test tolerates
     symmetric-difference rows whose scores sit within 1 ulp of the ef-th
-    score.  Parity is pinned by
+    score.  With ef at least the list size there is no boundary: every
+    reachable node is kept, which is what the hash-checked full-probe rows
+    rely on.  Parity is pinned by
     tests/test_hnsw_graph.py::test_batched_beam_matches_sequential.
 
     ``adj0``: (n, max_deg) int32 layer-0 adjacency as row positions,
@@ -645,7 +658,6 @@ class HNSWIndex:
         ef_search: int | None = None,
         query_id: str = "vec_id",
         query_vec: str = "embedding",
-        beam: str = "batched",
         dispatch: str = "auto",
     ) -> DataFrame:
         """Top-k: DataFrame[(query_id, id, score)].  ``ef = max(k, efSearch)``
@@ -662,26 +674,23 @@ class HNSWIndex:
         operator (a strictly better answer, recall 1.0, and faster below
         the crossover — the reference's own adaptivity precedent is
         ``ef = max(k, efSearch)``, src/main.ts:267) and larger batches to
-        the beam; ``"beam"`` / ``"exact"`` force a path (graph tests,
-        oracle rows, and crossover benches pin ``"beam"``).  The exact
-        route ignores ``n_probe``/``ef_search``/``beam``.
+        the beam; ``"beam"`` forces the graph path (graph tests, oracle
+        rows, and crossover benches pin it).  The exact route ignores
+        ``n_probe``/``ef_search``; a caller that always wants exact results
+        calls ``knn_exact(..., strategy="local_merge")`` directly.
 
-        ``beam="batched"`` (default) advances all of a list's queries one
-        best-first hop per iteration — one adjacency gather + one scoring
-        kernel per hop per list (VERDICT r7 #5) — visiting/retaining the
-        same nodes in the same order per query as the sequential beam given
-        identical scores; the scoring kernel (einsum row-dots) can differ
-        from the sequential gemv by 1 ulp, so callers needing byte-stable
-        scores against a hash-checked oracle pass ``beam="sequential"``
-        (ann_hnsw_full_probe does)."""
+        The layer-0 beam is batched (``_search_layer_batched``): all of a
+        list's queries advance one best-first hop per iteration — one
+        adjacency gather + one scoring kernel per hop per list (VERDICT r7
+        #5).  With ``ef_search`` at least the size of every list, each beam
+        keeps every reachable node, so the full-probe oracle rows
+        degenerate to exact kNN with no ef boundary for near-ties to cross."""
         spark = self.index_df.sparkSession
         if k <= 0:
             return spark.createDataFrame([], RESULT_SCHEMA)
-        if beam not in ("batched", "sequential"):
-            raise ValueError(f"unknown beam mode: {beam!r}")
-        if dispatch not in ("auto", "beam", "exact"):
+        if dispatch not in ("auto", "beam"):
             raise ValueError(f"unknown dispatch mode: {dispatch!r}")
-        if dispatch != "beam":
+        if dispatch == "auto":
             n = self.params.get("n_vectors")
             if n is None:
                 # one bounded job, memoized on the instance.  If the owner
@@ -708,22 +717,13 @@ class HNSWIndex:
                         "qvec", lambda x: x.cast("double") * F.col("scale")
                     ),
                 )
-            if dispatch == "exact":
-                from hnsw_spark.operators.knn import knn_exact
-
-                return knn_exact(
-                    base_df, queries, k=k, metric=self.metric,
-                    base_id="id", base_vec="vector",
-                    query_id=query_id, query_vec=query_vec,
-                    strategy="local_merge",
-                )
             # fused probe: ONE bounded limit+collect both sizes the batch
             # AND is the exact route's query transfer, so small batches pay
             # a single extra driver job, not a count + a second toPandas.
             # Row cap bounds the wasted transfer when a big batch hits a
             # tiny corpus and falls through to the beam.
             qcap = min(
-                _EXACT_DISPATCH_CELLS // max(int(n), 1) + 1, 1 << 16
+                _EXACT_DISPATCH_CELLS // max(int(n), 1) + 1, _MAX_DRIVER_BATCH
             )
             qpd = (
                 queries.select(
@@ -748,7 +748,6 @@ class HNSWIndex:
             or self.params.get("ef_construction", 100),
         )
         metric = self.metric
-        batched = beam == "batched"
         probes = route_probes(
             queries, self.centroids, metric, n_probe, query_id, query_vec
         )
@@ -827,33 +826,20 @@ class HNSWIndex:
                 for level in range(level_max, 0, -1):
                     ep = _greedy_upper(sim, upper, qprep, ep, level)
                 eps[i] = ep
-            out_q, out_i, out_s = [], [], []
+            qm = np.stack(qprep_rows)
+            qq = (
+                np.einsum("ij,ij->i", qm, qm)
+                if metric != "cosine"
+                else np.zeros(len(qm))
+            )
+            results = _search_layer_batched(sim, adj0, qm, qq, eps, ef)
             qids = qs["query_id"].to_numpy()
-            if batched:
-                qm = np.stack(qprep_rows)
-                qq = (
-                    np.einsum("ij,ij->i", qm, qm)
-                    if metric != "cosine"
-                    else np.zeros(len(qm))
-                )
-                results = _search_layer_batched(sim, adj0, qm, qq, eps, ef)
-                for i, found in enumerate(results):
-                    for sc, p in found[:k]:
-                        out_q.append(int(qids[i]))
-                        out_i.append(int(ids[p]))
-                        out_s.append(float(sc))
-            else:
-                # the original per-query beam, byte-stable scoring (gemv)
-                nbrs0 = [
-                    [[int(x) for x in adj0[i][adj0[i] >= 0]]] for i in range(n)
-                ]
-                for i, qprep in enumerate(qprep_rows):
-                    found = _search_layer(
-                        sim, nbrs0, qprep, int(eps[i]), 0, ef
-                    )[:k]
-                    out_q.extend(int(qids[i]) for _ in found)
-                    out_i.extend(int(ids[f[1]]) for f in found)
-                    out_s.extend(f[0] for f in found)
+            out_q, out_i, out_s = [], [], []
+            for i, found in enumerate(results):
+                for sc, p in found[:k]:
+                    out_q.append(int(qids[i]))
+                    out_i.append(int(ids[p]))
+                    out_s.append(float(sc))
             return pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
 
         key = "list_id"
@@ -912,7 +898,7 @@ class HNSWIndex:
                 # built/grown/merged index that meant re-running the entire
                 # assign + wire applyInPandas chain just to list the sub_ids
                 # — so persist it first (same library-owned contract as the
-                # exact-dispatch branch above)
+                # auto-dispatch sizing above)
                 lvl = self.index_df.storageLevel
                 if not (lvl.useMemory or lvl.useDisk):
                     from hnsw_spark.plans.cachereg import owned_persist
@@ -933,6 +919,46 @@ class HNSWIndex:
         # global merge: ids are unique across lists, so dedupe (src/main.ts:
         # 269-280) is structural and the merge is a pure top-k.
         return _topk_window(local, k)
+
+
+def _wire_list(
+    rows: pd.DataFrame,
+    m: int,
+    ef_construction: int,
+    metric: str,
+    existing: list[list[list[int]]] | None = None,
+    prev_entry: int | None = None,
+) -> pd.DataFrame:
+    """Wire one (sub-)list's rows in row order and return its node-table
+    rows: list_id, id, level, neighbors as ids, entry_id, the store
+    columns and, when salted, sub_id.  ``existing``/``prev_entry`` carry
+    the live graph of the first ``len(existing)`` rows for an incremental
+    insert (``build_local_graph``); the build passes neither."""
+    ids = rows["id"].to_numpy()
+    levels = rows["level"].to_numpy()
+    nbrs = build_local_graph(
+        levels, _group_vecs(rows), m, ef_construction, metric,
+        existing=existing, entry=prev_entry,
+    )
+    e = final_entry(
+        levels, n0=len(existing) if existing else 0, prev_entry=prev_entry
+    )
+    out = {
+        "list_id": rows["list_id"],
+        "id": ids,
+        "level": levels,
+        "neighbors": [
+            [[int(ids[x]) for x in lvl] for lvl in row] for row in nbrs
+        ],
+        "entry_id": np.full(len(ids), ids[e], dtype=np.int64),
+    }
+    if "qvec" in rows.columns:
+        out["qvec"], out["scale"] = rows["qvec"], rows["scale"]
+    else:
+        out["vector"] = rows["vector"]
+    if "sub_id" in rows.columns:
+        out = {"sub_id": rows["sub_id"], **out}
+    return pd.DataFrame(out)
 
 
 def add_points(
@@ -1028,23 +1054,12 @@ def add_points(
             .join(old_counts, "list_id", "left")
             .select(
                 "list_id",
-                F.ceil(
-                    (F.coalesce("_n_old", F.lit(0)) + F.col("_n_new"))
-                    / F.lit(cap)
-                )
-                .cast("long")
-                .alias("_n_salts"),
+                _n_salts(
+                    F.coalesce("_n_old", F.lit(0)) + F.col("_n_new"), cap
+                ),
             )
         )
-        assigned = (
-            assigned.join(F.broadcast(totals), "list_id")
-            .withColumn(
-                "sub_id",
-                F.col("list_id").cast("long") * _SALT_STRIDE
-                + F.pmod(F.xxhash64(F.col("id")), F.col("_n_salts")),
-            )
-            .drop("_n_salts")
-        )
+        assigned = _salt(assigned, totals)
     vcols = ["qvec", "scale"] if store == "int8" else ["vector"]
     cols = (["sub_id"] if salted else []) + [
         "list_id", "id", "level", *vcols, "neighbors", "entry_id",
@@ -1068,40 +1083,19 @@ def add_points(
         if new.empty:  # untouched (sub-)list: pass through unchanged
             return old.reset_index(drop=True)
         ordered = pd.concat([old, new]).reset_index(drop=True)
-        ids = ordered["id"].to_numpy()
-        levels = ordered["level"].to_numpy()
-        vecs = _group_vecs(ordered)
-        pos = {int(v): i for i, v in enumerate(ids)}
         if old.empty:
-            existing, prev_entry = None, None
-        else:
-            existing = [
-                [[pos[int(x)] for x in lvl if int(x) in pos] for lvl in row]
-                for row in old["neighbors"]
-            ]
-            eid = old["entry_id"].iloc[0]
-            prev_entry = pos[int(eid)] if not pd.isna(eid) else None
-        nbrs = build_local_graph(
-            levels, vecs, m, ef_construction, metric,
-            existing=existing, entry=prev_entry,
+            return _wire_list(ordered, m, ef_construction, metric)
+        pos = {int(v): i for i, v in enumerate(ordered["id"].to_numpy())}
+        existing = [
+            [[pos[int(x)] for x in lvl if int(x) in pos] for lvl in row]
+            for row in old["neighbors"]
+        ]
+        eid = old["entry_id"].iloc[0]
+        prev_entry = pos[int(eid)] if not pd.isna(eid) else None
+        return _wire_list(
+            ordered, m, ef_construction, metric,
+            existing=existing, prev_entry=prev_entry,
         )
-        e = final_entry(levels, n0=len(old), prev_entry=prev_entry)
-        out = {
-            "list_id": ordered["list_id"],
-            "id": ids,
-            "level": levels,
-            "neighbors": [
-                [[int(ids[x]) for x in lvl] for lvl in row] for row in nbrs
-            ],
-            "entry_id": np.full(len(ids), ids[e], dtype=np.int64),
-        }
-        if store == "int8":
-            out["qvec"], out["scale"] = ordered["qvec"], ordered["scale"]
-        else:
-            out["vector"] = ordered["vector"]
-        if salted:
-            out = {"sub_id": ordered["sub_id"], **out}
-        return pd.DataFrame(out)
 
     key = "sub_id" if salted else "list_id"
     # O(delta) for real: only (sub-)lists that RECEIVE new nodes cross the
@@ -1194,10 +1188,7 @@ def add_points(
         # groups are tolerated by search, same as the publish-time map).
         only_old = old_counts.join(
             assigned.select("list_id").distinct(), "list_id", "left_anti"
-        ).select(
-            "list_id",
-            F.ceil(F.col("_n_old") / F.lit(cap)).cast("long").alias("_n_salts"),
-        )
+        ).select("list_id", _n_salts(F.col("_n_old"), cap))
         grown._salt_counts = totals.unionByName(only_old)
     return grown
 
@@ -1333,27 +1324,7 @@ def build_hnsw_index(
 
     def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id").reset_index(drop=True)
-        levels = pdf["level"].to_numpy()
-        vecs = _group_vecs(pdf)
-        ids = pdf["id"].to_numpy()
-        nbrs = build_local_graph(levels, vecs, m, ef_construction, metric)
-        e = final_entry(levels)
-        out = {
-            "list_id": pdf["list_id"],
-            "id": ids,
-            "level": levels,
-            "neighbors": [
-                [[int(ids[x]) for x in lvl] for lvl in row] for row in nbrs
-            ],
-            "entry_id": np.full(len(ids), ids[e], dtype=np.int64),
-        }
-        if store == "int8":
-            out["qvec"], out["scale"] = pdf["qvec"], pdf["scale"]
-        else:
-            out["vector"] = pdf["vector"]
-        if salted:
-            out = {"sub_id": pdf["sub_id"], **out}
-        return pd.DataFrame(out)
+        return _wire_list(pdf, m, ef_construction, metric)
 
     key = "sub_id" if salted else "list_id"
     index_df = assigned.groupBy(key).applyInPandas(

@@ -94,8 +94,8 @@ def _local_topk(
 
 def merge_local_topk(local: DataFrame, k: int, n_queries: int) -> DataFrame:
     """Global top-k over per-batch candidates (``query_id, id, score``)
-    emitted with the NaN-as-+inf transport encoding (see
-    ``knn_local_merge_prepared``), decoded back to NaN here.
+    emitted with the NaN-as-+inf transport encoding (see ``_batch_topk``),
+    decoded back to NaN here.
 
     One query needs no per-query partitioning: ``orderBy(...).limit(k)``
     plans as a TakeOrderedAndProject (each partition keeps its top k, the
@@ -194,6 +194,37 @@ def _score_block(metric: str, qmat: np.ndarray, bmat: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.sqrt(d2))
 
 
+def _batch_topk(
+    metric: str,
+    q_ids: np.ndarray,
+    qmat: np.ndarray,
+    ids: np.ndarray,
+    vecs: pd.Series,
+    k: int,
+) -> pd.DataFrame:
+    """One Arrow batch's candidates for the global merge: BLAS-score the
+    queries ``qmat`` against the batch vectors ``vecs``, keep each query's
+    top k (``_local_topk``), and return them as a (query_id, id, score)
+    frame — the per-batch body of every BLAS scorer (``local_merge`` and
+    the IVF float store).
+
+    NaN (zero-norm cosine) must rank HIGHEST to match Catalyst's sort
+    order (Spark treats NaN as the largest double; numpy's argpartition
+    would instead sort it last) — selection uses +inf.  The emitted score
+    uses the +inf encoding too: pandas→Arrow turns NaN into NULL (which
+    desc-sorts LAST, silently dropping the row) — +inf survives the
+    boundary, sorts exactly where Catalyst puts NaN (largest), and is
+    unattainable for cosine/euclidean-similarity, so ``merge_local_topk``
+    decodes it back to NaN after the merge."""
+    bmat = np.ascontiguousarray(np.stack(vecs.to_numpy()), dtype=np.float64)
+    scores = _score_block(metric, qmat, bmat)  # (Q, N)
+    sel = np.where(np.isnan(scores), np.inf, scores)
+    rows, cols = _local_topk(sel, ids, k)
+    return pd.DataFrame(
+        {"query_id": q_ids[rows], "id": ids[cols], "score": sel[rows, cols]}
+    )
+
+
 def _knn_local_merge(base, queries, k, metric, base_id, base_vec, query_id, query_vec):
     qpd = queries.select(
         F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("v")
@@ -225,27 +256,8 @@ def knn_local_merge_prepared(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["id"].to_numpy()
-            bmat = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()), dtype=np.float64)
-            scores = _score_block(metric, qmat_l, bmat)  # (Q, N)
-            # NaN (zero-norm cosine) must rank HIGHEST to match Catalyst's
-            # sort order (Spark treats NaN as the largest double; numpy's
-            # argpartition would instead sort it last) — selection uses +inf.
-            sel = np.where(np.isnan(scores), np.inf, scores)
-            # per-query local top-k; the global merge applies the exact
-            # (score desc, id asc) order.  The emitted score uses the +inf
-            # encoding too: pandas→Arrow turns NaN into NULL (which
-            # desc-sorts LAST, silently dropping the row) — +inf survives the
-            # boundary, sorts exactly where Catalyst puts NaN (largest), and
-            # is unattainable for cosine/euclidean-similarity, so it is
-            # decoded back to NaN after the merge.
-            rows, cols = _local_topk(sel, ids, k)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids_l[rows],
-                    "id": ids[cols],
-                    "score": sel[rows, cols],
-                }
+            yield _batch_topk(
+                metric, q_ids_l, qmat_l, pdf["id"].to_numpy(), pdf["v"], k
             )
 
     b = base.select(

@@ -347,15 +347,11 @@ def ann_hnsw_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = cached_index(
         spark, sf_dir, "hnsw", n_lists=8, m=8, ef_construction=48, max_level=0
     )
-    # beam="sequential": this row is hash-checked against the exact-kNN
-    # oracle, so scoring must stay byte-stable (the batched beam's einsum
-    # kernel can differ from the sequential gemv by 1 ulp).
     # dispatch="beam": the row exists to degenerate the GRAPH machinery to
     # exact — auto dispatch would route Q=8 to the exact operator and stop
     # testing the graph at all.
     res = index.search(
-        qs, k=10, n_probe=8, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=8, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -623,8 +619,8 @@ def hnsw_merge_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge lost no vector, duplicated none, rebuilt every delta node's
     wiring reachably, and left base adjacency intact — with O(delta) merge
     cost (untouched base lists pass through the rewire cogroup unchanged).
-    beam="sequential"/dispatch="beam" because this row is hash-checked
-    (see ann_hnsw_full_probe)."""
+    dispatch="beam" because this row tests the graph path (see
+    ann_hnsw_full_probe)."""
     from hnsw_spark.operators.hnsw_graph import merge_hnsw_indexes
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -638,8 +634,7 @@ def hnsw_merge_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = merge_hnsw_indexes(a, b)
     qs = emb.filter(F.col("vec_id") < 8)
     res = merged.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -691,7 +686,7 @@ def hnsw_int8_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays end-to-end in SQL (scale = max|v|/127, q = round
     (v/s), bv = q·s, then exact cosine top-k against the RAW queries), so
     quantization, reconstruction, graph build, beam, and merge are all
-    value-hash-checked.  beam/dispatch pinned for the hash-checked path."""
+    value-hash-checked.  dispatch pinned to the graph path."""
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 8)
     index = cached_index(
@@ -699,8 +694,7 @@ def hnsw_int8_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_level=0, store="int8",
     )
     res = index.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -745,8 +739,7 @@ def hnsw_salted_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact kNN — so the salting (split completeness, per-sub-graph wiring,
     the list_id→sub_id fan-out join, the top-k merge across ~7× more
     groups) is value-hash-checked against the exact-kNN SQL oracle.
-    beam/dispatch pinned for the hash-checked path (see
-    ann_hnsw_full_probe)."""
+    dispatch pinned to the graph path (see ann_hnsw_full_probe)."""
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 8)
     index = cached_index(
@@ -754,8 +747,7 @@ def hnsw_salted_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_level=0, max_list_size=_SALT_CAP,
     )
     res = index.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -828,8 +820,8 @@ def hnsw_int8_merge_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGED index must equal exact kNN over the whole DEQUANTIZED corpus —
     the same SQL oracle the single-build int8 row replays — checking that
     the merge lost no vector, re-encoded none, and rebuilt the delta's
-    wiring over geometry identical to search's.  beam/dispatch pinned for
-    the hash-checked path (see ann_hnsw_full_probe)."""
+    wiring over geometry identical to search's.  dispatch pinned to the
+    graph path (see ann_hnsw_full_probe)."""
     from hnsw_spark.operators.hnsw_graph import merge_hnsw_indexes
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -844,8 +836,7 @@ def hnsw_int8_merge_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = merge_hnsw_indexes(a, b)
     qs = emb.filter(F.col("vec_id") < 8)
     res = merged.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -871,8 +862,7 @@ def hnsw_int8_insert_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame
     grown = add_points(base, emb.filter(F.col("vec_id") % 2 == 1))
     qs = emb.filter(F.col("vec_id") < 8)
     res = grown.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -902,8 +892,7 @@ def hnsw_salted_insert_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFra
     grown = add_points(base, emb.filter(F.col("vec_id") % 2 == 1))
     qs = emb.filter(F.col("vec_id") < 8)
     res = grown.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -927,8 +916,7 @@ def hnsw_salted_int8_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame
         max_level=0, store="int8", max_list_size=_SALT_CAP,
     )
     res = index.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -961,8 +949,7 @@ def hnsw_salted_merge_full_probe_q(spark: SparkSession, sf_dir: str) -> DataFram
     merged = merge_hnsw_indexes(base, delta)
     qs = emb.filter(F.col("vec_id") < 8)
     res = merged.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
@@ -988,8 +975,7 @@ def hnsw_salted_int8_insert_full_probe_q(
     grown = add_points(base, emb.filter(F.col("vec_id") % 2 == 1))
     qs = emb.filter(F.col("vec_id") < 8)
     res = grown.search(
-        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, beam="sequential",
-        dispatch="beam",
+        qs, k=10, n_probe=ANN_N_LISTS, ef_search=1 << 20, dispatch="beam",
     )
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 

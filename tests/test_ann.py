@@ -80,11 +80,12 @@ def test_save_is_whole_index_overwrite(spark, corpus, tmp_path):
     assert loaded.index_df.count() == 2000  # second save fully replaced the first
 
 
-def test_route_probes_distributed_matches_driver_path(spark):
-    # above max_driver_batch the routing runs as a broadcast-centroid
+def test_route_probes_distributed_matches_driver_path(spark, monkeypatch):
+    # above _MAX_DRIVER_BATCH the routing runs as a broadcast-centroid
     # mapInPandas (no driver collect); results must equal the driver path
     import numpy as np
 
+    from hnsw_spark.operators import ann as ann_mod
     from hnsw_spark.operators.ann import route_probes, train_centroids
 
     big_q = synthetic_vectors(spark, 100_000, 16, seed=11)
@@ -92,9 +93,8 @@ def test_route_probes_distributed_matches_driver_path(spark):
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
     cents = train_centroids(base, 8, "cosine", seed=3, sample_size=4096)
-    dist = route_probes(
-        big_q, cents, "cosine", n_probe=2, max_driver_batch=1000
-    )
+    monkeypatch.setattr(ann_mod, "_MAX_DRIVER_BATCH", 1000)
+    dist = route_probes(big_q, cents, "cosine", n_probe=2)
     assert dist.count() == 200_000  # every query routed to exactly n_probe lists
     sample = big_q.filter(F.col("vec_id") < 50)
     drv = route_probes(sample, cents, "cosine", n_probe=2)
@@ -106,24 +106,19 @@ def test_route_probes_distributed_matches_driver_path(spark):
     assert got_d == got_s
 
 
-def test_search_with_distributed_routing_equals_driver_routing(spark, corpus, queries):
+def test_search_with_distributed_routing_equals_driver_routing(
+    spark, corpus, queries, monkeypatch
+):
     # end-to-end: IVF search with the large-batch routing path gives the
     # same top-k as the (default) driver-side routing
     index = build_ivf_index(corpus, n_lists=8)
     a = index.search(queries, k=5, n_probe=8)
     from hnsw_spark.operators import ann as ann_mod
-    from hnsw_spark.operators.ann import route_probes as rp
 
-    def tiny_batch_rp(*args, **kw):
-        kw["max_driver_batch"] = 4  # force the distributed path
-        return rp(*args, **kw)
-
-    orig = ann_mod.route_probes
-    ann_mod.route_probes = tiny_batch_rp
-    try:
-        b = index.search(queries, k=5, n_probe=8)
-    finally:
-        ann_mod.route_probes = orig
+    # a 4-query driver cap sends the batch past the BLAS scorer and through
+    # the distributed route_probes path
+    monkeypatch.setattr(ann_mod, "_MAX_DRIVER_BATCH", 4)
+    b = index.search(queries, k=5, n_probe=8)
     assert {(r.query_id, r.id) for r in a.collect()} == {
         (r.query_id, r.id) for r in b.collect()
     }

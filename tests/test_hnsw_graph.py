@@ -257,21 +257,31 @@ def test_add_points_index_searchable(spark, embeddings):
 
 def test_hnsw_full_probe_equals_exact(spark, embeddings):
     # the registered ann_hnsw_full_probe degeneration: levels pinned to 0,
-    # all lists probed, ef >= list size -> identical id set to exact kNN
+    # all lists probed, ef >= list size -> identical id set to exact kNN,
+    # and identical dquant(score, 6) values, which is what the hash-checked
+    # full-probe rows emit from the batched beam
+    from hnsw_spark.operators.evaluation import dquant
+
     qs = embeddings.filter(F.col("vec_id") < 8)
     index = build_hnsw_index(
         embeddings, n_lists=8, m=8, ef_construction=48, metric="cosine",
         max_level=0,
     )
-    approx = {
-        (r.query_id, r.id)
-        for r in index.search(qs, k=10, n_probe=8, ef_search=1 << 20,
-                              dispatch="beam").collect()
-    }
-    exact = {
-        (r.query_id, r.id)
-        for r in knn_exact(embeddings, qs, k=10, metric="cosine").collect()
-    }
+
+    def rows(df):
+        return {
+            (r.query_id, r.id, r.score_fp)
+            for r in df.select(
+                "query_id", "id", dquant("score", 6).alias("score_fp")
+            ).collect()
+        }
+
+    approx = rows(
+        index.search(qs, k=10, n_probe=8, ef_search=1 << 20, dispatch="beam")
+    )
+    exact = rows(knn_exact(embeddings, qs, k=10, metric="cosine"))
+    assert len(approx) == 80
+    assert {(q, i) for q, i, _ in approx} == {(q, i) for q, i, _ in exact}
     assert approx == exact
     # every node really is pinned to layer 0 and entry_id is constant per list
     nodes = index.index_df.select("list_id", "level", "entry_id").toPandas()
@@ -815,8 +825,8 @@ def test_salted_matrix_merge_and_int8_insert(spark, embeddings):
 def test_crossover_aware_dispatch(spark, embeddings, monkeypatch):
     """VERDICT r8 #3: small batches (Q x N under the measured exact-BLAS
     crossover budget) route to the exact local_merge operator automatically;
-    above the budget the beam serves; "exact"/"beam" force a path; unknown
-    modes raise.  The exact route's physical plan has NO cogroup stage (the
+    above the budget the beam serves; "beam" forces the graph path; any
+    other mode (including the removed "exact") raises.  The exact route's physical plan has NO cogroup stage (the
     beam's signature), so beam-path work can never regress small-Q serving."""
     import hnsw_spark.operators.hnsw_graph as hg
 
@@ -844,29 +854,12 @@ def test_crossover_aware_dispatch(spark, embeddings, monkeypatch):
     assert "CoGroup" in plan_of(
         idx.search(qs, k=10, n_probe=4, ef_search=64, dispatch="beam")
     )
-    monkeypatch.setattr(hg, "_EXACT_DISPATCH_CELLS", 0)
-    assert "CoGroup" not in plan_of(
+    # no forced-exact mode: exact results come from knn_exact directly
+    with pytest.raises(ValueError, match="dispatch"):
         idx.search(qs, k=10, n_probe=4, dispatch="exact")
-    )
     with pytest.raises(ValueError, match="dispatch"):
         idx.search(qs, k=10, dispatch="nope")
     idx.index_df.unpersist()
-
-
-def test_search_beam_modes_agree_end_to_end(spark, embeddings):
-    """index.search under both beam modes returns the same (query, id)
-    result set on the fixture (scores may differ by 1 ulp)."""
-    idx = build_hnsw_index(
-        embeddings, n_lists=4, m=8, ef_construction=32, metric="cosine"
-    )
-    qs = embeddings.filter(F.col("vec_id") < 6)
-    a = idx.search(qs, k=10, n_probe=4, ef_search=64, beam="batched",
-                   dispatch="beam")
-    b = idx.search(qs, k=10, n_probe=4, ef_search=64, beam="sequential",
-                   dispatch="beam")
-    sa = {(r.query_id, r.id) for r in a.collect()}
-    sb = {(r.query_id, r.id) for r in b.collect()}
-    assert sa == sb
 
 
 def test_greedy_upper_matches_full_nbrs_descent():

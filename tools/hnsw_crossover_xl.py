@@ -83,14 +83,13 @@ def main() -> int:
         for _ in range(2):
             t0 = time.time()
             idx.search(
-                xq, k=10, n_probe=n_probe, ef_search=ef, beam="batched",
-                dispatch="beam"
+                xq, k=10, n_probe=n_probe, ef_search=ef, dispatch="beam"
             ).write.format("noop").mode("overwrite").save()
             walls.append(time.time() - t0)
         r = mean_recall(
             recall_table(
                 idx.search(xq, k=10, n_probe=n_probe, ef_search=ef,
-                           beam="batched", dispatch="beam"),
+                           dispatch="beam"),
                 exact_df,
             )
         ).collect()[0]["mean_recall"]
