@@ -865,13 +865,8 @@ def _prebuilt_ann_searches(spark, sf_dir: str) -> tuple[dict, callable]:
     pinned for the rest of the run)."""
     from pyspark.sql import functions as F
 
-    from hnsw_spark.queries.index import (
-        ANN_EF,
-        ANN_N_LISTS,
-        ANN_N_PROBE,
-        _INDEX_CACHE,
-        cached_index,
-    )
+    from hnsw_spark.plans import cachereg
+    from hnsw_spark.queries.index import ANN_EF, ANN_N_LISTS, ANN_N_PROBE, cached_index
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qbatch = emb.filter(F.col("vec_id") < 8)
@@ -881,9 +876,8 @@ def _prebuilt_ann_searches(spark, sf_dir: str) -> tuple[dict, callable]:
     )
 
     def cleanup() -> None:
-        for idx in _INDEX_CACHE.values():
-            idx.index_df.unpersist()
-        _INDEX_CACHE.clear()
+        for key in [k for k in cachereg._MEMO if k[1] == "index"]:
+            cachereg._MEMO.pop(key).index_df.unpersist()
 
     return {
         "ann_ivf_knn": lambda s, d: ivf.search(qbatch, k=10, n_probe=ANN_N_PROBE),

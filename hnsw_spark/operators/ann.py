@@ -280,7 +280,7 @@ class IVFIndex:
         query_vec: str,
     ) -> DataFrame | None:
         """Probed top-``shortlist_k`` for the float32 store via the same
-        vectorized per-batch scorer as ``knn_exact(strategy='local_merge')``
+        vectorized per-batch scorer as ``knn_exact``
         (knn.py:_batch_topk), restricted to the probed lists:
 
         - queries route driver-side against the tiny centroid matrix and

@@ -370,30 +370,6 @@ def _search_layer(
     return sorted(best, key=lambda t: (-t[0], t[1]))
 
 
-def _greedy_upper(
-    sim: _LocalSim, upper: dict[int, list[list[int]]], qprep: np.ndarray,
-    entry: int, level: int,
-) -> int:
-    """``_greedy_search`` over the sparse upper-layer adjacency dict (only
-    nodes with level >= 1 carry entries; descent at level l only ever
-    stands on nodes of level >= l, so a miss means no edges)."""
-    best = entry
-    best_score = float(sim.scores(qprep, np.asarray([entry]))[0])
-    improved = True
-    while improved:
-        improved = False
-        row = upper.get(best)
-        adj = row[level] if row is not None and level < len(row) else []
-        if not adj:
-            break
-        a = np.asarray(adj)
-        s = sim.scores(qprep, a)
-        j = int(np.argmax(s))
-        if s[j] > best_score:
-            best, best_score, improved = int(a[j]), float(s[j]), True
-    return best
-
-
 # Crossover budget for auto dispatch: exact brute force costs Q×N score
 # cells; the measured crossover at 1M×64 (BENCH_PROTOCOL hnsw_crossover)
 # puts exact ahead of the beam through Q=64 (64M cells) and behind by
@@ -594,32 +570,6 @@ def build_local_graph(
     return nbrs
 
 
-def search_local_graph(
-    levels: np.ndarray,
-    vecs: np.ndarray,
-    nbrs: list[list[list[int]]],
-    query: np.ndarray,
-    k: int,
-    ef: int,
-    metric: str = "cosine",
-) -> list[tuple[float, int]]:
-    """searchKNN over one partition's graph (src/main.ts:253-283): descend
-    levelMax→1 greedily, beam at layer 0 with ``ef``, take k (score, row)
-    pairs.  Entry point = first row at the max level (promotion is
-    strictly-greater, insertion order = row order)."""
-    n = len(levels)
-    if n == 0 or k <= 0:
-        return []
-    sim = _LocalSim(vecs, metric)
-    level_max = int(levels.max())
-    entry = int(np.argmax(levels == level_max))
-    qprep = sim.prep_query(np.asarray(query, dtype=np.float64))
-    ep = entry
-    for level in range(level_max, 0, -1):
-        ep = _greedy_search(sim, nbrs, qprep, ep, level)
-    return _search_layer(sim, nbrs, qprep, ep, 0, max(k, ef))[:k]
-
-
 class HNSWIndex:
     """Partitioned HNSW index: node table + coarse-quantizer centroids.
 
@@ -650,6 +600,15 @@ class HNSWIndex:
     def n_lists(self) -> int:
         return self.centroids.shape[0]
 
+    def _own_node_table(self) -> None:
+        """Persist the node table before search gives it a second consumer,
+        unless its owner already cached it.  The persist is library-owned:
+        ``hnsw_spark.release_caches()`` frees it."""
+        from hnsw_spark.plans.cachereg import is_cached, owned_persist
+
+        if not is_cached(self.index_df):
+            self.index_df = owned_persist(self.index_df)
+
     def search(
         self,
         queries: DataFrame,
@@ -677,7 +636,7 @@ class HNSWIndex:
         the beam; ``"beam"`` forces the graph path (graph tests, oracle
         rows, and crossover benches pin it).  The exact route ignores
         ``n_probe``/``ef_search``; a caller that always wants exact results
-        calls ``knn_exact(..., strategy="local_merge")`` directly.
+        calls ``knn_exact`` directly.
 
         The layer-0 beam is batched (``_search_layer_batched``): all of a
         list's queries advance one best-first hop per iteration — one
@@ -693,18 +652,13 @@ class HNSWIndex:
         if dispatch == "auto":
             n = self.params.get("n_vectors")
             if n is None:
-                # one bounded job, memoized on the instance.  If the owner
-                # has NOT cached the node table, persist it first (library
-                # -owned: hnsw_spark.release_caches() frees it) — otherwise
-                # the sizing count would materialize the applyInPandas
-                # build once and the exact route's scan would rebuild it a
-                # second time, making dispatch='auto' slower than the beam
-                # it replaces on uncached indexes (ADVICE r9)
-                lvl = self.index_df.storageLevel
-                if not (lvl.useMemory or lvl.useDisk):
-                    from hnsw_spark.plans.cachereg import owned_persist
-
-                    self.index_df = owned_persist(self.index_df)
+                # one bounded job, memoized on the instance.  The sizing
+                # count is a second consumer of the node table: without the
+                # persist it would materialize the applyInPandas build once
+                # and the exact route's scan would rebuild it, making
+                # dispatch='auto' slower than the beam it replaces on
+                # uncached indexes (ADVICE r9)
+                self._own_node_table()
                 n = self.index_df.count()
                 self.params["n_vectors"] = n
             base_df = self.index_df
@@ -738,7 +692,7 @@ class HNSWIndex:
 
                 return knn_local_merge_prepared(
                     base_df, qpd, k, self.metric,
-                    base_id="id", base_vec="vector",
+                    base_id="id", base_vec="vector", query_vec=query_vec,
                 )
         n_probe = min(n_probe or max(1, self.n_lists // 4), self.n_lists)
         ef = max(
@@ -788,18 +742,17 @@ class HNSWIndex:
             posn_c = np.clip(posn, 0, n - 1)
             valid = (adj_ids >= 0) & (ids[posn_c] == adj_ids)
             adj0 = np.where(valid, posn_c, -1).astype(np.int64)
-            # upper layers: only nodes with level >= 1 carry extra lists —
-            # a sparse dict keeps the Python mapping cost O(upper nodes)
-            upper: dict[int, list[list[int]]] = {}
+            # upper layers in _greedy_search's nested shape: positions per
+            # level for nodes with level >= 1; the level-0 majority shares
+            # one empty row, never mutated (descent at level l only stands
+            # on level >= l nodes)
+            upper: list[list[list[int]]] = [[]] * n
             if level_max > 0:
-                id_to_pos = None
+                id_to_pos = {int(v): j for j, v in enumerate(ids)}
                 for i in np.nonzero(levels > 0)[0]:
-                    row = nodes["neighbors"].iloc[int(i)]
-                    if id_to_pos is None:
-                        id_to_pos = {int(v): j for j, v in enumerate(ids)}
-                    upper[int(i)] = [
+                    upper[i] = [
                         [id_to_pos[int(x)] for x in lvl if int(x) in id_to_pos]
-                        for lvl in row
+                        for lvl in nodes["neighbors"].iloc[int(i)]
                     ]
             # the persisted build-time entry (final_entry): re-deriving it
             # from id order breaks once incremental inserts interleave ids
@@ -824,7 +777,7 @@ class HNSWIndex:
             for i, qprep in enumerate(qprep_rows):
                 ep = entry
                 for level in range(level_max, 0, -1):
-                    ep = _greedy_upper(sim, upper, qprep, ep, level)
+                    ep = _greedy_search(sim, upper, qprep, ep, level)
                 eps[i] = ep
             qm = np.stack(qprep_rows)
             qq = (
@@ -897,13 +850,8 @@ class HNSWIndex:
                 # of whatever pipeline produced it — for a freshly
                 # built/grown/merged index that meant re-running the entire
                 # assign + wire applyInPandas chain just to list the sub_ids
-                # — so persist it first (same library-owned contract as the
-                # auto-dispatch sizing above)
-                lvl = self.index_df.storageLevel
-                if not (lvl.useMemory or lvl.useDisk):
-                    from hnsw_spark.plans.cachereg import owned_persist
-
-                    self.index_df = owned_persist(self.index_df)
+                # — so persist it first
+                self._own_node_table()
                 sub_map = self.index_df.select(
                     "list_id", F.col("sub_id").alias("_sub")
                 ).distinct()

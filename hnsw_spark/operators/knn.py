@@ -6,24 +6,18 @@ Parity targets:
 - ``searchKNN`` result contract (src/main.ts:253-283): ≤ k rows per query,
   ``{id, score}`` sorted score-desc; empty index or k ≤ 0 → empty result.
 
-Two physical strategies, same semantics:
+One physical plan, ``local_merge``: queries are broadcast to executors once
+(sc.broadcast of a numpy matrix); ``mapInPandas`` computes a vectorized
+numpy score block per Arrow batch and keeps only the per-batch top-k per
+query, so the shuffle input is Q×k×(#batches) rows, never Q×N; a final
+window over that reduced set yields the global top-k.  Scoring is BLAS
+matmul (float64), never a per-row Python loop.  A one-query batch merges
+with ``orderBy(...).limit(k)`` instead of the window: a
+TakeOrderedAndProject in which each partition keeps its k best rows and
+the driver merges them, with no exchange.
 
-- ``window``: crossJoin(broadcast(queries)) → Catalyst higher-order-function
-  score → row_number over (query) window.  Fully declarative, bit-deterministic
-  left-to-right scoring — this is the DuckDB-oracle-parity plan.  The window
-  shuffles Q×N scored rows, so it is the small/medium-Q plan.
-- ``local_merge``: the 100 TB plan.  Queries are broadcast to executors once
-  (sc.broadcast of a numpy matrix); ``mapInPandas`` computes a vectorized
-  numpy score block per Arrow batch and keeps only the per-batch top-k per
-  query, so the shuffle input collapses from Q×N rows to Q×k×(#batches);
-  a final window over that reduced set yields the global top-k.  Scoring is
-  BLAS matmul (float64), never a per-row Python loop.  A one-query batch
-  merges with ``orderBy(...).limit(k)`` instead of the window: a
-  TakeOrderedAndProject in which each partition keeps its k best rows and
-  the driver merges them, with no exchange.
-
-Ties are broken by ascending id in both strategies so results are
-deterministic and oracle-comparable.
+Ties are broken by ascending id so results are deterministic and
+oracle-comparable.
 """
 
 from __future__ import annotations
@@ -49,12 +43,6 @@ _RESULT_SCHEMA = StructType(
         StructField("id", LongType()),
         StructField("score", DoubleType()),
     ]
-)
-
-
-# shared guard (see plans/parallelism.py for the AQE-materialization note)
-from hnsw_spark.plans.parallelism import (  # noqa: E402
-    narrow_partition_count as _narrow_partition_count,
 )
 
 
@@ -125,50 +113,52 @@ def knn_exact(
     base_vec: str = "embedding",
     query_id: str = "vec_id",
     query_vec: str = "embedding",
-    strategy: str = "window",
+    strategy: str = "local_merge",
 ) -> DataFrame:
     """Exact brute-force top-k: DataFrame[(query_id, id, score)].
 
-    ``k <= 0`` → empty result (reference src/main.ts:258-260 guard); an empty
-    base likewise yields zero rows with the same schema.
+    ``strategy`` names the one plan, ``local_merge`` (module docstring);
+    any other value raises.  ``k <= 0`` → empty result (reference
+    src/main.ts:258-260 guard); an empty base likewise yields zero rows
+    with the same schema.  A NULL or ragged vector raises a ValueError
+    naming its column and id.
     """
+    if strategy != "local_merge":
+        raise ValueError(f"unknown strategy: {strategy!r}")
     if metric not in ("cosine", "euclidean"):
         get_metric(metric)  # raises with the reference's message
     if k <= 0:
         return base.sparkSession.createDataFrame([], _RESULT_SCHEMA)
-    if strategy == "window":
-        return _knn_window(base, queries, k, metric, base_id, base_vec, query_id, query_vec)
-    if strategy == "local_merge":
-        return _knn_local_merge(base, queries, k, metric, base_id, base_vec, query_id, query_vec)
-    raise ValueError(f"unknown strategy: {strategy!r}")
+    qpd = queries.select(
+        F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("v")
+    ).toPandas()
+    return knn_local_merge_prepared(
+        base, qpd, k, metric, base_id, base_vec, query_vec=query_vec
+    )
 
 
-def _knn_window(base, queries, k, metric, base_id, base_vec, query_id, query_vec):
-    sim = get_metric(metric)
-    q = queries.select(
-        F.col(query_id).cast("long").alias("query_id"),
-        F.col(query_vec).alias("_qvec"),
-    )
-    b = base.select(
-        F.col(base_id).cast("long").alias("id"),
-        F.col(base_vec).alias("_bvec"),
-    )
-    # A small parquet file reads as ONE split, which serializes the whole
-    # Q×N scoring stage on one core (measured 4s for 64×2000 cosine).  Fan
-    # out only when the scan yielded fewer splits than the session's
-    # parallelism — at scale the corpus scan already produces thousands of
-    # splits and this branch never fires, so the extra exchange only ever
-    # moves a frame small enough to have collapsed below the core count.
-    # Round-robin repartition leaves per-pair arithmetic bit-identical;
-    # the top-k window re-establishes the (score desc, id asc) order.
-    target = base.sparkSession.sparkContext.defaultParallelism
-    nparts = _narrow_partition_count(b)
-    if nparts is not None and nparts < target:
-        b = b.repartition(target)
-    scored = b.crossJoin(F.broadcast(q)).select(
-        "query_id", "id", sim("_qvec", "_bvec").alias("score")
-    )
-    return _topk_window(scored, k)
+def _vector_matrix(vecs: np.ndarray, ids: np.ndarray, column: str) -> np.ndarray:
+    """(N, d) float64 matrix of one batch of a vector column.  A NULL or
+    ragged vector makes ``np.stack`` fail with numpy's bare shape message;
+    only then are the rows inspected, to raise a ValueError naming the
+    column and the first offending id."""
+    try:
+        return np.ascontiguousarray(np.stack(vecs), dtype=np.float64)
+    except (ValueError, TypeError):
+        lens = [len(v) if hasattr(v, "__len__") else None for v in vecs]
+        bad = next(
+            (i for i, n in enumerate(lens) if n is None or n != lens[0]), None
+        )
+        if bad is None:
+            raise
+        if lens[bad] is None:
+            what = f"is NULL at id {ids[bad]}"
+        else:
+            what = (
+                f"has length {lens[bad]} at id {ids[bad]}"
+                f" but {lens[0]} at id {ids[0]}"
+            )
+        raise ValueError(f"vector column {column!r} {what}") from None
 
 
 def _score_block(metric: str, qmat: np.ndarray, bmat: np.ndarray) -> np.ndarray:
@@ -201,12 +191,14 @@ def _batch_topk(
     ids: np.ndarray,
     vecs: pd.Series,
     k: int,
+    column: str = "vector",
 ) -> pd.DataFrame:
     """One Arrow batch's candidates for the global merge: BLAS-score the
     queries ``qmat`` against the batch vectors ``vecs``, keep each query's
     top k (``_local_topk``), and return them as a (query_id, id, score)
     frame — the per-batch body of every BLAS scorer (``local_merge`` and
-    the IVF float store).
+    the IVF float store).  ``column`` names the vector column in the
+    NULL/ragged-vector error (``_vector_matrix``).
 
     NaN (zero-norm cosine) must rank HIGHEST to match Catalyst's sort
     order (Spark treats NaN as the largest double; numpy's argpartition
@@ -216,20 +208,13 @@ def _batch_topk(
     boundary, sorts exactly where Catalyst puts NaN (largest), and is
     unattainable for cosine/euclidean-similarity, so ``merge_local_topk``
     decodes it back to NaN after the merge."""
-    bmat = np.ascontiguousarray(np.stack(vecs.to_numpy()), dtype=np.float64)
+    bmat = _vector_matrix(vecs.to_numpy(), ids, column)
     scores = _score_block(metric, qmat, bmat)  # (Q, N)
     sel = np.where(np.isnan(scores), np.inf, scores)
     rows, cols = _local_topk(sel, ids, k)
     return pd.DataFrame(
         {"query_id": q_ids[rows], "id": ids[cols], "score": sel[rows, cols]}
     )
-
-
-def _knn_local_merge(base, queries, k, metric, base_id, base_vec, query_id, query_vec):
-    qpd = queries.select(
-        F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("v")
-    ).toPandas()
-    return knn_local_merge_prepared(base, qpd, k, metric, base_id, base_vec)
 
 
 def knn_local_merge_prepared(
@@ -239,16 +224,19 @@ def knn_local_merge_prepared(
     metric: str,
     base_id: str = "vec_id",
     base_vec: str = "embedding",
+    query_vec: str = "embedding",
 ) -> DataFrame:
     """``local_merge`` over an ALREADY-COLLECTED query batch (pandas columns
     ``query_id``, ``v``) — callers that had to materialize the batch anyway
     (the ANN auto-dispatch probe bounds it with a limit+collect) reuse that
-    one driver transfer instead of paying a second toPandas job."""
+    one driver transfer instead of paying a second toPandas job.
+    ``query_vec`` names the batch's source column in the NULL/ragged-vector
+    error."""
     spark = base.sparkSession
-    if qpd.empty:  # np.stack rejects an empty batch; mirror the window path
+    if qpd.empty:  # np.stack rejects an empty batch
         return spark.createDataFrame([], _RESULT_SCHEMA)
     q_ids = qpd["query_id"].to_numpy()
-    qmat = np.ascontiguousarray(np.stack(qpd["v"].to_numpy()), dtype=np.float64)
+    qmat = _vector_matrix(qpd["v"].to_numpy(), q_ids, query_vec)
     bq = spark.sparkContext.broadcast((q_ids, qmat))
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -257,7 +245,8 @@ def knn_local_merge_prepared(
             if pdf.empty:
                 continue
             yield _batch_topk(
-                metric, q_ids_l, qmat_l, pdf["id"].to_numpy(), pdf["v"], k
+                metric, q_ids_l, qmat_l, pdf["id"].to_numpy(), pdf["v"], k,
+                base_vec,
             )
 
     b = base.select(
@@ -309,10 +298,10 @@ def knn_label_vote(
     the max similarity among the voting neighbors (max, not mean: order-
     invariant, so bit-stable across engines and partitionings).
 
-    Plan: exact top-(k+1) via the window tier, drop the self-match, re-rank
+    Plan: exact top-(k+1) via ``knn_exact``, drop the self-match, re-rank
     to k, then two keyed aggregations.  At scale the first stage swaps to
-    the ``local_merge``/ANN tier unchanged — everything after the top-k is
-    a (query_id, label) groupBy whose cardinality is Q×k.
+    the ANN tier unchanged — everything after the top-k is a
+    (query_id, label) groupBy whose cardinality is Q×k.
     """
     qs = emb.filter(F.col(id_col) < n_queries)
     # +1 then drop self: cosine(self)=1.0 always ranks first, so the true
@@ -427,10 +416,9 @@ def mutual_knn_pairs(
     Mutual-kNN is the standard noise-robust edge set for embedding
     clustering and semantic dedup (a one-directional top-k edge to a hub
     vector is usually spurious; a reciprocal edge rarely is).  Plan: one
-    top-(k+1) pass via the vectorized ``local_merge`` tier (every row is a
-    query, so the Q×N scored-row shuffle of the window tier is exactly the
-    blowup local_merge exists to avoid — BLAS block scoring, per-batch
-    top-k, Q×k×batches shuffle input), self-match dropped, re-ranked to k,
+    top-(k+1) ``knn_exact`` pass (every row is a query; BLAS block
+    scoring, per-batch top-k, Q×k×batches shuffle input, never Q×N rows),
+    self-match dropped, re-ranked to k,
     then ONE groupBy on the canonical (min, max) pair key: each directed
     edge lands in its unordered pair's group, a pair is mutual iff both
     directions are present, and the (rank_ab, rank_ba, score) columns are
@@ -444,7 +432,6 @@ def mutual_knn_pairs(
     top = knn_exact(
         emb, emb, k=k + 1, metric=metric,
         base_id=id_col, base_vec=vec_col, query_id=id_col, query_vec=vec_col,
-        strategy="local_merge",
     ).filter(F.col("id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
     ranked = top.withColumn("rank", F.row_number().over(w)).filter(

@@ -597,16 +597,11 @@ def pagerank_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hnsw_spark.operators.pagerank import pagerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # local_merge (BLAS block scoring + per-partition top-k), not the
-    # window tier: every corpus row is a query here, and the window path's
-    # Catalyst crossJoin scored Q×N cells through interpreted array lambdas
-    # plus a Q×N-row window shuffle — measured 8-20 s of the gate's 11-15 s
-    # wall at sf0.1 (the same all-rows-are-queries shape mutual_knn_pairs
-    # already routes through local_merge).  At a 100 TB corpus the kNN
-    # graph would come from the ANN tier; this gate measures PAGERANK.
-    nn = knn_exact(
-        emb, emb, k=6, metric="cosine", strategy="local_merge"
-    ).filter(F.col("query_id") != F.col("id"))
+    # every corpus row is a query here.  At a 100 TB corpus the kNN graph
+    # would come from the ANN tier; this gate measures PAGERANK.
+    nn = knn_exact(emb, emb, k=6, metric="cosine").filter(
+        F.col("query_id") != F.col("id")
+    )
     edges = nn.select(
         F.col("query_id").alias("src"), F.col("id").alias("dst")
     ).localCheckpoint()  # consumed by pagerank's node/degree/dangling setup

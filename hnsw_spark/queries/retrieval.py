@@ -363,12 +363,12 @@ def retrieval_quality_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < _RQ_NQ)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
-    sys_ranked = knn_exact(
-        emb, qs, k=_RQ_K, metric="euclidean", strategy="window"
-    ).withColumn("rank", F.row_number().over(w))
+    sys_ranked = knn_exact(emb, qs, k=_RQ_K, metric="euclidean").withColumn(
+        "rank", F.row_number().over(w)
+    )
     # cosine ground truth = the memoized exact top-k frame (same nq=8,
-    # k=10, cosine, window tier — deterministic, so sharing changes no
-    # values; VERDICT r11 #6): one corpus scoring pass instead of two
+    # k=10, cosine — deterministic, so sharing changes no values;
+    # VERDICT r11 #6): one corpus scoring pass instead of two
     from hnsw_spark.queries.index import cached_exact_topk
 
     qrels = (

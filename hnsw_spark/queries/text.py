@@ -19,6 +19,7 @@ from hnsw_spark.functions.text import (
     words,
 )
 from hnsw_spark.operators.evaluation import dquant
+from hnsw_spark.plans.cachereg import session_memo
 from hnsw_spark.registry import query
 from hnsw_spark.sources.tables import load_table
 
@@ -557,19 +558,15 @@ p1 AS MATERIALIZED (
 # was 14.8 s at sf0.01, ~10 s of it retraining what bpe_merges already
 # computed).  Training is deterministic (ties break count DESC, left,
 # right; flat/incremental parity pinned in tests/test_bpe.py), so sharing
-# changes no values — the same session-memoization pattern as
-# queries/index.cached_index.
-_BPE_TRAIN_CACHE: dict[tuple, list] = {}
+# changes no values.
 _BPE_SCHEMA = "merge_rank int, left string, right string, pair_count bigint"
 
 
 def _trained_merges(spark: SparkSession, sf_dir: str, n_merges: int = 20) -> list:
-    key = (sf_dir, n_merges)
-    rows = _BPE_TRAIN_CACHE.get(key)
-    if rows is None:
+    def _build():
         from hnsw_spark.operators.bpe import bpe_train
 
-        rows = [
+        return [
             (r["merge_rank"], r["left"], r["right"], r["pair_count"])
             for r in bpe_train(
                 load_table(spark, sf_dir, "documents"),
@@ -577,8 +574,8 @@ def _trained_merges(spark: SparkSession, sf_dir: str, n_merges: int = 20) -> lis
                 incremental=False,
             ).collect()
         ]
-        _BPE_TRAIN_CACHE[key] = rows
-    return rows
+
+    return session_memo(spark, ("bpe_merges", sf_dir, n_merges), _build)
 
 
 @query("bpe_merges", _bpe_merges_sql())

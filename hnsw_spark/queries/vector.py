@@ -45,10 +45,10 @@ _COSINE_EXPR = (
 _EUCLID_EXPR = "1.0 / (1.0 + list_distance(qv, bv))"
 
 
-def _knn(spark: SparkSession, sf_dir: str, metric: str, strategy: str) -> DataFrame:
+def _knn(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < N_QUERIES)
-    res = knn_exact(emb, qs, k=K, metric=metric, strategy=strategy)
+    res = knn_exact(emb, qs, k=K, metric=metric)
     return res.select("query_id", "id", dquant("score", 6).alias("score_fp"))
 
 
@@ -58,7 +58,7 @@ def _knn(spark: SparkSession, sf_dir: str, metric: str, strategy: str) -> DataFr
 )
 def knn_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4+F2: exact cosine top-k (reference src/bench/metrics.ts:9-24)."""
-    return _knn(spark, sf_dir, "cosine", "window")
+    return _knn(spark, sf_dir, "cosine")
 
 
 @query(
@@ -67,7 +67,7 @@ def knn_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_exact_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4+F4: exact euclidean-similarity top-k (1/(1+dist) inversion)."""
-    return _knn(spark, sf_dir, "euclidean", "window")
+    return _knn(spark, sf_dir, "euclidean")
 
 
 @query(
@@ -75,10 +75,11 @@ def knn_exact_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
     _KNN_ORACLE.format(nq=N_QUERIES, k=K, score_expr=_COSINE_EXPR),
 )
 def knn_topk_local_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 exact tier via the scale strategy: per-partition vectorized local
+    """Q1 exact tier, named for its plan: per-partition vectorized local
     top-k (mapInPandas + BLAS) then global merge — the plan that survives
-    100 TB (shuffle input is Q×k×batches, not Q×N)."""
-    return _knn(spark, sf_dir, "cosine", "local_merge")
+    100 TB (shuffle input is Q×k×batches, not Q×N).  ``knn_exact`` has no
+    other plan, so this row equals ``knn_exact_cosine``."""
+    return _knn(spark, sf_dir, "cosine")
 
 
 _PAIRS_ORACLE = """
@@ -666,8 +667,9 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-scoring filter — pushed into the corpus scan side of the broadcast
     join, so wrong-label candidates are never even scored... the inverse
     of `knn_filtered`'s allow-list.  At scale the scoring stage swaps to
-    the ANN tier with the same per-anchor label-exclusion predicate."""
-    from hnsw_spark.operators.knn import _topk_window
+    the ANN tier with the same per-anchor label-exclusion predicate.  The
+    scoring is its own Catalyst plan, not ``knn_exact``: that kernel has
+    no per-query filter to prune candidates before scoring."""
     from hnsw_spark.functions.similarity import cosine_similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -681,14 +683,10 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("_bv"),
         F.col("label"),
     )
-    # same small-file fan-out as the window kNN tier (knn.py:_knn_window):
-    # a one-split scan would serialize the Q×N scoring on one core
-    from hnsw_spark.operators.knn import _narrow_partition_count
+    # a one-split scan would serialize the Q×N Catalyst scoring on one core
+    from hnsw_spark.plans.parallelism import fan_out_narrow
 
-    target = spark.sparkContext.defaultParallelism
-    nparts = _narrow_partition_count(corpus)
-    if nparts is not None and nparts < target:
-        corpus = corpus.repartition(target)
+    corpus = fan_out_narrow(corpus)
     scored = (
         corpus.join(F.broadcast(qs), F.col("label") != F.col("_qlabel"))
         .select(

@@ -11,6 +11,7 @@ from hnsw_spark.operators.evaluation import mean_recall, recall_table
 from hnsw_spark.operators.knn import knn_exact
 from hnsw_spark.plans.persistence import delete_index, load_index, save_index
 from hnsw_spark.sources.synthetic import synthetic_vectors
+from knn_oracle import knn_window
 
 pytestmark = pytest.mark.slow  # heavy parity/property module (see pytest.ini)
 
@@ -26,7 +27,9 @@ def queries(spark, corpus):
 
 
 def _recall(spark, corpus, queries, index, k=10, n_probe=None):
-    exact = knn_exact(corpus, queries, k=k, metric=index.metric)
+    # the window oracle, not knn_exact: the float IVF store scores with
+    # knn_exact's own BLAS kernel (_batch_topk)
+    exact = knn_window(corpus, queries, k=k, metric=index.metric)
     approx = index.search(queries, k=k, n_probe=n_probe)
     return mean_recall(recall_table(approx, exact)).first().mean_recall
 

@@ -9,16 +9,36 @@ import pytest
 from pyspark.sql import functions as F
 
 from hnsw_spark.operators.hnsw_graph import (
+    _greedy_search,
     _LocalSim,
+    _search_layer,
     _select_neighbors,
     build_hnsw_index,
     build_local_graph,
     final_entry,
-    search_local_graph,
 )
 from hnsw_spark.operators.knn import knn_exact
+from knn_oracle import knn_window
 
 pytestmark = pytest.mark.slow  # heavy parity/property module (see pytest.ini)
+
+
+def search_local_graph(levels, vecs, nbrs, query, k, ef, metric="cosine"):
+    """Reference searchKNN over one graph (src/main.ts:253-283), one query
+    at a time: descend levelMax→1 greedily, beam at layer 0 with ``ef``,
+    take k (score, row) pairs.  Entry point = first row at the max level
+    (promotion is strictly-greater, insertion order = row order)."""
+    n = len(levels)
+    if n == 0 or k <= 0:
+        return []
+    sim = _LocalSim(vecs, metric)
+    level_max = int(levels.max())
+    entry = int(np.argmax(levels == level_max))
+    qprep = sim.prep_query(np.asarray(query, dtype=np.float64))
+    ep = entry
+    for level in range(level_max, 0, -1):
+        ep = _greedy_search(sim, nbrs, qprep, ep, level)
+    return _search_layer(sim, nbrs, qprep, ep, 0, max(k, ef))[:k]
 
 
 def test_final_entry_promotion_rules():
@@ -279,7 +299,7 @@ def test_hnsw_full_probe_equals_exact(spark, embeddings):
     approx = rows(
         index.search(qs, k=10, n_probe=8, ef_search=1 << 20, dispatch="beam")
     )
-    exact = rows(knn_exact(embeddings, qs, k=10, metric="cosine"))
+    exact = rows(knn_window(embeddings, qs, k=10, metric="cosine"))
     assert len(approx) == 80
     assert {(q, i) for q, i, _ in approx} == {(q, i) for q, i, _ in exact}
     assert approx == exact
@@ -840,7 +860,7 @@ def test_crossover_aware_dispatch(spark, embeddings, monkeypatch):
     # fixture scale: Q*N = 8*2000 cells, far under the 64M budget -> exact
     auto = idx.search(qs, k=10, n_probe=1, ef_search=1)
     assert "CoGroup" not in plan_of(auto)
-    exact = knn_exact(embeddings, qs, k=10, metric="cosine")
+    exact = knn_window(embeddings, qs, k=10, metric="cosine")
     assert {(r.query_id, r.id) for r in auto.collect()} == {
         (r.query_id, r.id) for r in exact.collect()
     }
@@ -860,39 +880,6 @@ def test_crossover_aware_dispatch(spark, embeddings, monkeypatch):
     with pytest.raises(ValueError, match="dispatch"):
         idx.search(qs, k=10, dispatch="nope")
     idx.index_df.unpersist()
-
-
-def test_greedy_upper_matches_full_nbrs_descent():
-    """The sparse upper-layer dict descent (_greedy_upper) must land on the
-    same per-level local maximum as _greedy_search over the full nested
-    adjacency — for every query and entry, across metrics."""
-    from hnsw_spark.operators.hnsw_graph import (
-        _LocalSim,
-        _greedy_search,
-        _greedy_upper,
-        build_local_graph,
-    )
-
-    rng = np.random.RandomState(23)
-    n, d = 300, 12
-    vecs = rng.randn(n, d)
-    levels = np.minimum(rng.geometric(0.6, n) - 1, 3)
-    for metric in ("cosine", "euclidean"):
-        nbrs = build_local_graph(levels, vecs, m=6, ef_construction=24,
-                                 metric=metric)
-        upper = {
-            i: nbrs[i] for i in range(n) if levels[i] > 0
-        }
-        sim = _LocalSim(vecs, metric)
-        level_max = int(levels.max())
-        entry = int(np.argmax(levels == level_max))
-        for q in rng.randn(5, d):
-            qprep = sim.prep_query(q)
-            ep_full, ep_sparse = entry, entry
-            for level in range(level_max, 0, -1):
-                ep_full = _greedy_search(sim, nbrs, qprep, ep_full, level)
-                ep_sparse = _greedy_upper(sim, upper, qprep, ep_sparse, level)
-                assert ep_full == ep_sparse, (metric, level)
 
 
 def test_add_points_untouched_lists_skip_rewire(spark, embeddings):

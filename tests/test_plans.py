@@ -64,14 +64,18 @@ def test_tpch_q1_scan_prunes_to_needed_columns(spark):
 
 
 def test_knn_broadcasts_queries_never_sort_merge(spark):
-    for name in ("knn_exact_cosine", "knn_filtered", "embedding_neardup"):
+    # knn_exact ships its queries by sc.broadcast, so there is no join at
+    # all: one Arrow scoring stage, and the query-keyed top-k window is the
+    # only exchange.  knn_filtered is knn_exact over a pre-filtered corpus.
+    for name in ("knn_exact_cosine", "knn_filtered"):
         f = _facts(name, spark)
-        assert f.broadcast_joins >= 1, name  # small query/probe side
-        assert f.sort_merge_joins == 0, name  # corpus never co-sorted
-        # top-k window, plus the fan-out exchange the window tier inserts
-        # ONLY when the corpus scan collapsed below the core count (always
-        # true at test scale, never at 100 TB — knn.py:_knn_window)
-        assert f.shuffles <= 2, name
+        assert f.broadcast_joins == f.sort_merge_joins == 0, name
+        assert f.python_stages == 1, name
+        assert f.shuffles <= 1, name
+    f = _facts("embedding_neardup", spark)
+    assert f.broadcast_joins >= 1  # small probe side
+    assert f.sort_merge_joins == 0  # corpus never co-sorted
+    assert f.shuffles <= 2
 
 
 def test_bm25_and_decontamination_broadcast_the_small_side(spark):
@@ -362,20 +366,21 @@ def test_one_query_knn_merges_without_exchange(spark, tmp_path):
     """A one-query search through local_merge, the IVF BLAS path and the
     HNSW auto route merges with an ordered limit (TakeOrderedAndProject:
     per-partition top k, merged on the driver) — no Exchange — and returns
-    exactly the window plan's rows, tied 10th score and NaN row included.
+    exactly the window oracle's rows, tied 10th score and NaN row included.
     Two queries keep the query-keyed window."""
     from hnsw_spark.operators.ann import build_ivf_index
     from hnsw_spark.operators.hnsw_graph import build_hnsw_index
     from hnsw_spark.operators.knn import knn_exact
     from hnsw_spark.plans.persistence import load_index, save_index
+    from knn_oracle import knn_window
 
     corpus, queries = _tied_corpus(spark)
     q1 = queries.filter(F.col("vec_id") == 1)
-    want = _rows(knn_exact(corpus, q1, k=10, strategy="window"))
-    wide = _rows(knn_exact(corpus, q1, k=11, strategy="window"))
+    want = _rows(knn_window(corpus, q1, k=10))
+    wide = _rows(knn_window(corpus, q1, k=11))
     assert wide[9][2] == wide[10][2]  # the 10th score is tied past the cut
     assert want[0][2] == "nan" and [r[1] for r in want].count(5) == 1
-    want2 = _rows(knn_exact(corpus, queries, k=10, strategy="window"))
+    want2 = _rows(knn_window(corpus, queries, k=10))
 
     save_index(build_ivf_index(corpus, n_lists=4, seed=3), str(tmp_path / "ivf"))
     ivf = load_index(spark, str(tmp_path / "ivf"))
@@ -385,7 +390,7 @@ def test_one_query_knn_merges_without_exchange(spark, tmp_path):
     )
     hnsw = load_index(spark, str(tmp_path / "hnsw"))
     searches = {
-        "local_merge": lambda q: knn_exact(corpus, q, k=10, strategy="local_merge"),
+        "local_merge": lambda q: knn_exact(corpus, q, k=10),
         "ivf": lambda q: ivf.search(q, k=10, n_probe=4),
         "hnsw_auto": lambda q: hnsw.search(q, k=10),
     }

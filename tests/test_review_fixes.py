@@ -92,17 +92,48 @@ def test_query_caches_are_session_keyed(spark):
     cache must key on the LIVE session (applicationId) — a stop+recreate
     of the SparkSession in one process must miss the cache instead of
     serving a DataFrame bound to a dead JVM context.  Pinned structurally
-    (no Spark restart in the shared-session suite): every cache entry's
-    key leads with this session's applicationId, so a new session's
-    lookups cannot collide."""
+    (no Spark restart in the shared-session suite): every memo key leads
+    with this session's applicationId, so a new session's lookups cannot
+    collide."""
+    from hnsw_spark.plans import cachereg
     from hnsw_spark.queries import index as qindex
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     qindex.cached_exact_topk(spark, sf_dir)
     app = spark.sparkContext.applicationId
-    assert app == qindex._session_token(spark)
-    assert all(k[0] == app for k in qindex._EXACT_TOPK_CACHE)
+    assert all(k[0] == app for k in cachereg._MEMO)
     # a different session token misses: the dead-session entry is
     # unreachable from a recreated session's lookups
-    assert (("app-other", sf_dir)) not in qindex._EXACT_TOPK_CACHE
-    assert (app, sf_dir) in qindex._EXACT_TOPK_CACHE
+    assert ("app-other", "exact_topk", sf_dir) not in cachereg._MEMO
+    assert (app, "exact_topk", sf_dir) in cachereg._MEMO
+
+
+def test_bpe_memo_misses_for_another_session(spark, monkeypatch):
+    """The BPE training memo keys on the live applicationId like every
+    other session memo: another session (a stop+recreate in one process)
+    retrains instead of reusing the dead session's merges."""
+    from types import SimpleNamespace
+
+    import hnsw_spark.operators.bpe as bpe
+    from hnsw_spark.plans import cachereg
+    from hnsw_spark.queries import text
+
+    trained = []
+
+    def fake_train(docs, n_merges, incremental):
+        trained.append(docs)
+        row = {"merge_rank": 1, "left": "a", "right": "b", "pair_count": 2}
+        return SimpleNamespace(collect=lambda: [row])
+
+    # an empty memo for this test alone (created if the module has none)
+    monkeypatch.setattr(cachereg, "_MEMO", {}, raising=False)
+    monkeypatch.setattr(bpe, "bpe_train", fake_train)
+    monkeypatch.setattr(text, "load_table", lambda s, sf, name: s)
+    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-other"))
+    assert text._trained_merges(spark, "sf-memo", 3) == [(1, "a", "b", 2)]
+    text._trained_merges(spark, "sf-memo", 3)
+    assert trained == [spark]  # same session: one training
+    text._trained_merges(other, "sf-memo", 3)
+    assert trained == [spark, other]  # another session misses
+
+

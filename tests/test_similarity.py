@@ -16,6 +16,10 @@ from hnsw_spark.functions.similarity import (
     get_metric,
 )
 from hnsw_spark.operators.knn import knn_exact
+from knn_oracle import knn_window
+
+# the one production kernel and the test-local Catalyst oracle it must equal
+KNN = {"window": knn_window, "local_merge": knn_exact}
 
 
 def _pairs_df(spark, a, b):
@@ -68,7 +72,7 @@ def test_sequential5_golden(spark, sequential5, strategy):
     q = spark.createDataFrame(
         [(0, [3.0, 4.0, 5.0, 6.0, 7.0])], "vec_id bigint, embedding array<float>"
     )
-    res = knn_exact(sequential5, q, k=3, metric="cosine", strategy=strategy)
+    res = KNN[strategy](sequential5, q, k=3, metric="cosine")
     rows = res.orderBy(F.desc("score"), "id").collect()
     assert [r.id for r in rows] == [3, 4, 2]
     assert rows[0].score == pytest.approx(1.0, abs=1e-9)
@@ -100,8 +104,8 @@ def test_window_and_local_merge_agree(spark):
     base = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     qs = base.filter(F.col("vec_id") < 5)
     for metric in ("cosine", "euclidean"):
-        w = knn_exact(base, qs, k=7, metric=metric, strategy="window")
-        m = knn_exact(base, qs, k=7, metric=metric, strategy="local_merge")
+        w = knn_window(base, qs, k=7, metric=metric)
+        m = knn_exact(base, qs, k=7, metric=metric)
         wr = {(r.query_id, r.id) for r in w.collect()}
         mr = {(r.query_id, r.id) for r in m.collect()}
         assert wr == mr
@@ -109,34 +113,29 @@ def test_window_and_local_merge_agree(spark):
 
 def test_knn_strategies_agree_on_nan_ranking(spark):
     # Spark sorts NaN as the largest double, so a zero-norm (NaN-cosine) row
-    # ranks FIRST under desc ordering in the window strategy; the
+    # ranks FIRST under desc ordering in the window oracle; the
     # local_merge selection must agree (numpy would otherwise drop NaN).
-    from hnsw_spark.operators.knn import knn_exact
-
     rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.5, 0.5]), (3, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = df.filter("vec_id = 1")
     res = {}
     for strat in ("window", "local_merge"):
-        got = knn_exact(df, q, k=3, metric="cosine", strategy=strat).collect()
+        got = KNN[strat](df, q, k=3, metric="cosine").collect()
         res[strat] = [r.id for r in got]
     assert res["window"] == res["local_merge"] == [0, 1, 2]
 
 
 def test_knn_strategies_agree_at_scale(spark):
-    # the 100 TB plan (local_merge) must return exactly the window plan's
+    # the 100 TB plan (local_merge) must return exactly the window oracle's
     # results on a larger corpus — guards the per-batch top-k + global merge
     # against boundary/tie divergence.
-    from pyspark.sql import functions as F
-
-    from hnsw_spark.operators.knn import knn_exact
     from hnsw_spark.sources.synthetic import synthetic_vectors
 
     corpus = synthetic_vectors(spark, 20000, 32, seed=5).repartition(16).cache()
     qs = corpus.filter(F.col("vec_id") < 6)
     for metric in ("cosine", "euclidean"):
-        w = knn_exact(corpus, qs, k=10, metric=metric, strategy="window")
-        m = knn_exact(corpus, qs, k=10, metric=metric, strategy="local_merge")
+        w = knn_window(corpus, qs, k=10, metric=metric)
+        m = knn_exact(corpus, qs, k=10, metric=metric)
         wa = {(r.query_id, r.id, round(r.score, 9)) for r in w.collect()}
         ma = {(r.query_id, r.id, round(r.score, 9)) for r in m.collect()}
         assert wa == ma
@@ -144,15 +143,48 @@ def test_knn_strategies_agree_at_scale(spark):
 
 
 def test_local_merge_empty_query_batch(spark, sequential5):
-    # an empty query batch returns an empty (query_id, id, score) frame in
-    # BOTH strategies (np.stack would otherwise raise on the collected batch)
-    from pyspark.sql import functions as F
-
+    # an empty query batch returns an empty (query_id, id, score) frame,
+    # as the window oracle does (np.stack would otherwise raise on the
+    # collected batch)
     empty_q = sequential5.filter(F.col("vec_id") < 0)
-    for strat in ("window", "local_merge"):
-        res = knn_exact(sequential5, empty_q, k=5, strategy=strat)
+    for knn in KNN.values():
+        res = knn(sequential5, empty_q, k=5)
         assert res.count() == 0
         assert res.columns == ["query_id", "id", "score"]
+
+
+def test_knn_exact_has_one_strategy(spark, sequential5):
+    # local_merge is the only plan; the window plan lives in the tests
+    q = sequential5.filter(F.col("vec_id") == 1)
+    assert knn_exact(sequential5, q, k=2, strategy="local_merge").count() == 2
+    for strat in ("window", "nope"):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            knn_exact(sequential5, q, k=2, strategy=strat)
+
+
+def test_knn_exact_names_null_and_ragged_vectors(spark):
+    """A NULL or wrong-length vector fails with its column and id named —
+    on the query side (stacked on the driver) and on the base side
+    (stacked in the Python worker) — never numpy's bare shape message or
+    a silent NULL-score row."""
+    schema = "vec_id long, emb array<double>"
+    good = [(0, [1.0, 0.0]), (2, [0.7, 0.7])]
+    q = spark.createDataFrame([(9, [1.0, 0.0])], schema)
+
+    def run(base, queries):
+        return knn_exact(
+            base, queries, k=3, base_vec="emb", query_vec="emb"
+        ).collect()
+
+    for bad, msg in (
+        ((1, None), r"'emb' is NULL at id 1"),
+        ((1, [1.0, 2.0, 3.0]), r"'emb' has length 3 at id 1 but 2 at id 0"),
+    ):
+        rows = spark.createDataFrame(good + [bad], schema).coalesce(1)
+        with pytest.raises(Exception, match=msg):  # base side, in the worker
+            run(rows, q)
+        with pytest.raises(ValueError, match=msg):  # query side, on the driver
+            run(spark.createDataFrame(good, schema), rows)
 
 
 def test_local_topk_keeps_lowest_ids_among_tied_scores():
