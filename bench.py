@@ -1367,8 +1367,8 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
 
     # ADC-only agreement vs m (VERDICT r10 #5): m — bytes per vector — is
     # the lever that moves the ADC-only path; OPQ-style rotations measured
-    # NOT to move top-k agreement at serving shapes (tools/opq_probe.py,
-    # recorded in pq_adc_agreement_recorded below), so the honest sizing
+    # NOT to move top-k agreement at serving shapes (recorded in
+    # pq_adc_agreement_recorded below), so the honest sizing
     # curve is the deliverable.  m=16 reuses the store-ladder measurement.
     adc_by_m = {}
     for pm in (8, 16, 32):
@@ -1434,7 +1434,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
 
     out = {
         "ann_crossover": xo_cell,
-        # ONE-OFF recorded axis points (tools/crossover_xl.py, measured
+        # ONE-OFF recorded axis points (see measured_by, measured
         # 2026-08-15 on an idle 32-core/128 GiB box, calib matmul_1024
         # 21-30 ms): the scale trend the per-round 4M cell extrapolates.
         # Not re-measured per round — a 16M generate+build costs ~5 min
@@ -1451,7 +1451,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
             # taken without digging through code comments.
             "recorded_one_off": True,
             "measured_on": "2026-08-15",
-            "measured_by": "tools/crossover_xl.py",
+            "measured_by": "tools/crossover_xl.py at commit 14b6499, since retired",
             "host_calib_matmul_1024_ms": [21, 30],
             "8M_512lists_12probe": {
                 "exact_wall_best_s": 5.795, "ivf_wall_best_s": 3.806,
@@ -1465,12 +1465,12 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
             },
         },
         "hnsw_crossover": hnsw_xo_cell,
-        # ONE-OFF recorded HNSW axis point (tools/hnsw_crossover_xl.py,
+        # ONE-OFF recorded HNSW axis point (see measured_by,
         # round 8): does the batched-beam verdict hold as n grows?
         "hnsw_crossover_xl_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-15",
-            "measured_by": "tools/hnsw_crossover_xl.py",
+            "measured_by": "tools/hnsw_crossover_xl.py at commit c3502f7, since retired",
             "note": (
                 "exact walls vary 2-13 s per session for Q=512; speedups "
                 "are vs the SAME session's best-of-3 exact wall"
@@ -1490,7 +1490,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
         "int8_hnsw_xl_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-15",
-            "measured_by": "tools/int8_hnsw_xl.py",
+            "measured_by": "tools/int8_hnsw_xl.py at commit 09899e3, since retired",
             "note": (
                 "the int8 GRAPH store at the crossover scale point (1M x 64 "
                 "clustered, Q=512, probe 6 / ef 96, same-session exact "
@@ -1517,7 +1517,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
         "salted_int8_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-16",
-            "measured_by": "tools/salted_int8_probe.py",
+            "measured_by": "tools/salted_int8_probe.py at commit 04a15bf, since retired",
             "note": (
                 "the salted x int8 COMPOSITION at the shape where the "
                 "knobs compose at 100 TB (VERDICT r9 #7): 60k x 32 with "
@@ -1586,7 +1586,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
         "salted_skew_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-15",
-            "measured_by": "tools/salted_skew_probe.py",
+            "measured_by": "tools/salted_skew_probe.py at commit 38d7564, since retired",
             "note": (
                 "skewed-build straggler fix (VERDICT r8 #8): 60k x 32 with "
                 "half the corpus in ONE tight cluster -> one 31,752-row "
@@ -1658,7 +1658,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
         "pq_adc_agreement_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-16",
-            "measured_by": "tools/opq_probe.py",
+            "measured_by": "tools/opq_probe.py at commit fc9a8c0, since retired",
             "note": (
                 "VERDICT r10 #5 adjudicated by measurement: neither the "
                 "parametric OPQ rotation (Ge et al. 2013, eigenvalue-"
@@ -1693,7 +1693,7 @@ def _protocol_axes(spark, sf_dir: str, qs) -> dict:
         "pq_residual_agreement_recorded": {
             "recorded_one_off": True,
             "measured_on": "2026-08-16",
-            "measured_by": "tools/residual_pq_probe.py",
+            "measured_by": "tools/residual_pq_probe.py at commit 71f7d46, since retired",
             "note": (
                 "VERDICT r11 #3 adjudicated by measurement: RESIDUAL "
                 "encoding (IVFADC, Jegou sec. IV — build_ivf_index("

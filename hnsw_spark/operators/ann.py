@@ -12,13 +12,19 @@ probing is likewise floored so k results are reachable); ``n_lists`` plays
 M's build-granularity role.
 
 Scale design:
-- Build: MLlib KMeans (distributed, Tungsten-backed) over ``array_to_vector``;
-  assignment is one model.transform pass.  The index table is partitioned by
-  ``list_id`` on write, so probing prunes parquet partitions at scan time.
-- Search: the probe table (query_id × n_probe rows, tiny) is broadcast and
-  equi-joined on list_id — no crossJoin against the corpus; scoring stays in
-  whole-stage codegen; the per-query top-k reduces via window over the
-  already-pruned candidate set.
+- Build: seeded k-means on a bounded, deterministic hash sample, driver-side
+  (``train_centroids``); assignment is one vectorized mapInPandas pass.  The
+  index table is partitioned by ``list_id`` on write, so probing prunes
+  parquet partitions at scan time.
+- One coarse quantizer: ``nearest_lists`` is the only nearest-centroid
+  kernel.  Build assignment, query routing (driver-side and distributed),
+  the HNSW tier and residual PQ all call it, so a row and a query equal to
+  it always meet in the same list, ties included (lowest list id first).
+- Search: a query batch up to ``_MAX_DRIVER_BATCH`` rows is collected once
+  and routed on the driver; the float32 store then scores the probed lists
+  with the BLAS kernel of ``knn_exact``, the other stores join a broadcast
+  probe table on list_id.  Larger batches route distributed.  The per-query
+  top-k merges under (score desc, id asc).
 - Correctness: recall@k vs the exact operator (the reference's own validation
   regime, bench/README.md:108); n_probe = n_lists degenerates to exact search.
 """
@@ -34,32 +40,104 @@ from hnsw_spark.operators.knn import (
     _RESULT_SCHEMA,
     _batch_topk,
     _topk_window,
+    _vector_matrix,
+    collect_query_batch,
     merge_local_topk,
 )
 
-# Largest query batch collected to the driver: route_probes routes up to
-# this many queries driver-side, IVFIndex's BLAS scorer and HNSWIndex's
-# auto dispatch serve up to this many; a larger batch takes the
-# distributed path (one limit-probe decides, no count job).
+# Largest query batch collected to the driver: IVFIndex.search,
+# HNSWIndex.search and route_probes route or serve up to this many; a larger
+# batch routes distributed (one limit-probe decides, no count job).
 _MAX_DRIVER_BATCH = 1 << 16
 
 
-def _route_matrix(
-    qmat: np.ndarray, centroids: np.ndarray, metric: str, n_probe: int
+def nearest_lists(
+    x: np.ndarray, centroids: np.ndarray, metric: str, n_probe: int = 1
 ) -> np.ndarray:
-    """(Q, n_probe) nearest-centroid lists per query row, one numpy pass —
-    the shared routing math of the driver-side probe paths."""
+    """(n, n_probe) ids of each row's nearest centroids, nearest first.
+
+    The one coarse-quantizer kernel: build assignment, query routing and
+    residual PQ all call it, so they break ties the same way — the lowest
+    list id first (``argmin`` for one probe, a stable argsort for more).
+    Duplicate centroids, which k-means returns when a corpus has fewer
+    distinct vectors than lists, are such ties: a query must probe the list
+    its own copies were assigned to.  Cosine ranks by the dot product of
+    normalized rows, euclidean by squared distance."""
     if metric == "cosine":
-        qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
-        cn = _normalize_rows(centroids)
-        d = -(qn @ cn.T)
+        d = -(_normalize_rows(x) @ _normalize_rows(centroids).T)
     else:
         d = (
-            (qmat * qmat).sum(1, keepdims=True)
-            - 2.0 * (qmat @ centroids.T)
+            (x * x).sum(1, keepdims=True)
+            - 2.0 * (x @ centroids.T)
             + (centroids * centroids).sum(1)
         )
-    return np.argsort(d, axis=1)[:, :n_probe]
+    if n_probe == 1:
+        return d.argmin(axis=1)[:, None]
+    return np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+
+
+def _probe_table(
+    queries: DataFrame,
+    batch: tuple[np.ndarray, np.ndarray] | None,
+    centroids: np.ndarray,
+    metric: str,
+    n_probe: int,
+    query_id: str,
+    query_vec: str,
+) -> DataFrame:
+    """(query_id, list_id, qvec) probe table — Q × n_probe rows — of the
+    batch ``collect_query_batch`` returned for ``queries``.
+
+    A collected batch routes driver-side and comes back broadcast-hinted,
+    so the probe join never shuffles the corpus.  An over-cap batch (None)
+    routes distributed through ``assign_lists(n_probe=)`` (broadcast
+    centroids, vectorized mapInPandas), so a 10M-query batch job never
+    lands on the driver, and comes back un-hinted (AQE picks).  Both paths
+    run ``nearest_lists``, so they return the same lists."""
+    if batch is None:
+        assigned = assign_lists(
+            queries.select(
+                F.col(query_id).cast("long").alias("id"),
+                F.col(query_vec).alias("vector"),
+            ),
+            centroids,
+            metric,
+            n_probe=n_probe,
+        )
+        return assigned.select(
+            F.col("id").alias("query_id"), "list_id", F.col("vector").alias("qvec")
+        )
+    import pandas as pd
+
+    spark = queries.sparkSession
+    q_ids, qmat = batch
+    if len(q_ids) == 0:
+        return spark.createDataFrame(
+            [], "query_id long, list_id int, qvec array<float>"
+        )
+    # ship the routed batch back as ONE Arrow-backed pandas frame (numpy
+    # column arrays, no per-row/per-element Python loop — ADVICE r4); the
+    # float32 cast is lossless w.r.t. the array<float> source values.
+    # .tolist() (not list(...)) so array ELEMENTS are Python int/float, not
+    # numpy scalars: with Arrow disabled, createDataFrame's _createFromLocal
+    # verifier rejects numpy.int32 inside array<int> — the engine's own
+    # session enables Arrow (session.py) but library callers' sessions may
+    # not, and this must work in the consumer's default environment
+    # (reference regime: .github/workflows/ci.yml runs consumer-default).
+    routed = pd.DataFrame(
+        {
+            "query_id": q_ids,
+            "probe_lists": nearest_lists(qmat, centroids, metric, n_probe)
+            .astype(np.int32)
+            .tolist(),
+            "qvec": qmat.astype(np.float32).tolist(),
+        }
+    )
+    return F.broadcast(
+        spark.createDataFrame(
+            routed, "query_id long, probe_lists array<int>, qvec array<float>"
+        ).select("query_id", F.explode("probe_lists").alias("list_id"), "qvec")
+    )
 
 
 def route_probes(
@@ -74,61 +152,14 @@ def route_probes(
     analogue of the reference's upper-layer descent, src/main.ts:262-265).
     Returns DataFrame[(query_id, list_id, qvec)] — Q × n_probe rows.
 
-    Two physical paths behind one contract: batches up to
-    ``_MAX_DRIVER_BATCH`` rows route driver-side (one numpy argsort against
-    the tiny centroid matrix) and come back broadcast-hinted, so the probe
-    join never shuffles the corpus; anything larger routes distributed via
-    ``multi_probe_assign`` (broadcast centroids, vectorized mapInPandas), so
-    a 10M-query batch job never lands on the driver.  The split is decided
-    by a limit-probe — the small path pays no count job."""
-    spark = queries.sparkSession
-    q = queries.select(
-        F.col(query_id).cast("long").alias("query_id"),
-        F.col(query_vec).alias("v"),
-    )
-    qpd = q.limit(_MAX_DRIVER_BATCH + 1).toPandas()
-    if qpd.empty:
-        return spark.createDataFrame(
-            [], "query_id long, list_id int, qvec array<float>"
-        )
-    if len(qpd) > _MAX_DRIVER_BATCH:
-        assigned = multi_probe_assign(
-            q.select(F.col("query_id").alias("id"), F.col("v").alias("vector")),
-            centroids,
-            metric,
-            n_probe,
-        )
-        return assigned.select(
-            F.col("id").alias("query_id"),
-            "list_id",
-            F.col("vector").alias("qvec"),
-        )
-    qmat = np.stack(qpd["v"].to_numpy()).astype(np.float64)
-    probe_lists = _route_matrix(qmat, centroids, metric, n_probe)
-    # ship the routed batch back as ONE Arrow-backed pandas frame (numpy
-    # column arrays, no per-row/per-element Python loop — ADVICE r4); the
-    # float32 cast is lossless w.r.t. the array<float> source values
-    import pandas as pd
-
-    # .tolist() (not list(...)) so array ELEMENTS are Python int/float, not
-    # numpy scalars: with Arrow disabled, createDataFrame's _createFromLocal
-    # verifier rejects numpy.int32 inside array<int> — the engine's own
-    # session enables Arrow (session.py) but library callers' sessions may
-    # not, and this must work in the consumer's default environment
-    # (reference regime: .github/workflows/ci.yml runs consumer-default).
-    routed = pd.DataFrame(
-        {
-            "query_id": qpd["query_id"].to_numpy(np.int64),
-            "probe_lists": probe_lists.astype(np.int32).tolist(),
-            "qvec": qmat.astype(np.float32).tolist(),
-        }
-    )
-    # broadcast-hinted: the small-batch probe table joins the corpus without
-    # shuffling it; the distributed path above returns un-hinted (AQE picks)
-    return F.broadcast(
-        spark.createDataFrame(
-            routed, "query_id long, probe_lists array<int>, qvec array<float>"
-        ).select("query_id", F.explode("probe_lists").alias("list_id"), "qvec")
+    The batch is collected once by ``collect_query_batch`` (a NULL or
+    ragged query vector fails there, naming its column and id), bounded by
+    ``_MAX_DRIVER_BATCH``: up to it the batch routes driver-side, above it
+    distributed (``_probe_table``).  The split is decided by that bounded
+    collect — the small path pays no count job."""
+    batch = collect_query_batch(queries, query_id, query_vec, _MAX_DRIVER_BATCH)
+    return _probe_table(
+        queries, batch, centroids, metric, n_probe, query_id, query_vec
     )
 
 
@@ -179,7 +210,10 @@ class IVFIndex:
         shortlist_k = k * rerank_factor if rerank_with is not None else k
         n_probe = min(n_probe or max(1, self.n_lists // 4), self.n_lists)
         index_df = self.index_df
-        if "vector" in index_df.columns:
+        batch = collect_query_batch(
+            queries, query_id, query_vec, _MAX_DRIVER_BATCH
+        )
+        if batch is not None and "vector" in index_df.columns:
             # float32 store, small query batch: the BLAS probed scorer —
             # one gemm per (list ∩ Arrow batch) instead of a per-pair
             # Catalyst fold.  Measured at 1M×64 / n_lists=256 / n_probe=8
@@ -187,19 +221,14 @@ class IVFIndex:
             # pruning was real but per-element scoring threw it away; this
             # path is what makes n_probe/n_lists pruning actually beat the
             # exact tier (the crossover axis BENCH_PROTOCOL records).
-            # Routes driver-side itself, so no route_probes round-trip.
-            blas = self._search_float_blas(
-                queries, shortlist_k, n_probe, query_id, query_vec
+            return self._maybe_rerank(
+                self._search_float_blas(*batch, shortlist_k, n_probe),
+                queries, k, query_id, query_vec, rerank_with,
             )
-            if blas is not None:
-                return self._maybe_rerank(
-                    blas, queries, k, query_id, query_vec, rerank_with
-                )
-        probes = route_probes(
-            queries, self.centroids, self.metric, n_probe, query_id, query_vec
+        probes = _probe_table(
+            queries, batch, self.centroids, self.metric, n_probe,
+            query_id, query_vec,
         )
-        # route_probes broadcast-hints the small-batch path itself; a
-        # distributed (large-batch) probe table must NOT be force-broadcast
         if "codes" in index_df.columns:
             # PQ-stored index (store='pq'): the probe join moves m-byte codes
             # instead of 4·d-byte vectors, then ADC scores via per-query
@@ -273,15 +302,14 @@ class IVFIndex:
 
     def _search_float_blas(
         self,
-        queries: DataFrame,
+        q_ids: np.ndarray,
+        qmat: np.ndarray,
         shortlist_k: int,
         n_probe: int,
-        query_id: str,
-        query_vec: str,
-    ) -> DataFrame | None:
-        """Probed top-``shortlist_k`` for the float32 store via the same
-        vectorized per-batch scorer as ``knn_exact``
-        (knn.py:_batch_topk), restricted to the probed lists:
+    ) -> DataFrame:
+        """Probed top-``shortlist_k`` of a collected query batch for the
+        float32 store, via the same vectorized per-batch scorer as
+        ``knn_exact`` (knn.py:_batch_topk), restricted to the probed lists:
 
         - queries route driver-side against the tiny centroid matrix and
           ship to executors as ONE broadcast (ids, matrix, list→query map);
@@ -298,25 +326,11 @@ class IVFIndex:
           encoding for zero-norm cosine rows.
 
         At n_probe = n_lists this degenerates to exactly the local_merge
-        exact plan (same kernel, same merge), which the DuckDB oracle pins.
-        Returns None for over-limit batches — the caller falls back to the
-        distributed join path."""
-        spark = queries.sparkSession
-        qpd = (
-            queries.select(
-                F.col(query_id).cast("long").alias("query_id"),
-                F.col(query_vec).alias("v"),
-            )
-            .limit(_MAX_DRIVER_BATCH + 1)
-            .toPandas()
-        )
-        if len(qpd) > _MAX_DRIVER_BATCH:
-            return None
-        if qpd.empty:
+        exact plan (same kernel, same merge), which the DuckDB oracle pins."""
+        spark = self.index_df.sparkSession
+        if len(q_ids) == 0:
             return spark.createDataFrame([], _RESULT_SCHEMA)
-        q_ids = qpd["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.ascontiguousarray(np.stack(qpd["v"].to_numpy()), dtype=np.float64)
-        probe_lists = _route_matrix(qmat, self.centroids, self.metric, n_probe)
+        probe_lists = nearest_lists(qmat, self.centroids, self.metric, n_probe)
         by_list: dict[int, list[int]] = {}
         for qi, lists in enumerate(probe_lists):
             for lid in lists:
@@ -405,7 +419,7 @@ def _kmeans_numpy(
         # The old per-center loop (k boolean masks × fancy-index × mean)
         # cost ~30 s per training run at the 65k sample — and a PQ build
         # runs this once per subspace, so m=16 paid ~15 min of driver-side
-        # Python per build (measured, tools/residual_pq_probe.py round 12).
+        # Python per build (measured in round 12).
         counts = np.bincount(assign, minlength=k).astype(np.float64)
         sums = np.empty((k, d))
         for dim in range(d):
@@ -417,65 +431,58 @@ def _kmeans_numpy(
     return c
 
 
+def training_sample(base: DataFrame, sample_size: int, seed: int) -> np.ndarray:
+    """(n, d) float64 training sample of an (id, vector) frame — the one
+    sampler of the coarse quantizer and the PQ codebooks.
+
+    Probes with ``limit(sample_size + 1)``: a corpus that fits the training
+    budget is already held whole (no count job, no sampling bias); only a
+    larger one pays for the count and a deterministic, partition-invariant
+    hash sample keyed on id and ``seed``."""
+    from hnsw_spark.operators.levels import uniform_from_id
+
+    pdf = base.limit(sample_size + 1).toPandas()
+    if len(pdf) > sample_size:
+        n_rows = base.count()
+        frac = min(1.0, sample_size / max(n_rows, 1))
+        pdf = (
+            base.filter(uniform_from_id(F.col("id"), seed) < frac)
+            .limit(sample_size)
+            .toPandas()
+        )
+    return _vector_matrix(pdf["vector"].to_numpy(), pdf["id"].to_numpy(), "vector")
+
+
 def train_centroids(
     base: DataFrame,
     n_lists: int,
     metric: str,
     seed: int = 42,
     max_iter: int = 10,
-    train_method: str = "sample",
     sample_size: int = 65536,
 ) -> np.ndarray:
-    """Coarse-quantizer training over a (id, vector) frame → (n_lists, d).
-
-    ``train_method='sample'`` (default, the FAISS recipe): train on a
-    deterministic hash-sampled subset driver-side.  ``'mllib'`` runs
-    distributed KMeans when even the training sample must stay off-driver.
-    """
-    spherical = metric == "cosine"
-    if train_method == "mllib":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feat = F.col("vector").cast("array<double>")
-        if spherical:
-            norm = F.sqrt(F.aggregate(feat, F.lit(0.0), lambda a, x: a + x * x))
-            feat = F.transform(feat, lambda x: x / F.nullif(norm, F.lit(0.0)))
-        train = base.withColumn("features", array_to_vector(feat))
-        km = KMeans(k=n_lists, seed=seed, maxIter=max_iter, featuresCol="features")
-        model = km.fit(train)
-        centroids = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-        )
-    elif train_method == "sample":
-        # probe with limit(sample_size+1): if the whole corpus fits the
-        # training budget we already hold it (no count job, no sampling
-        # bias); only a larger corpus pays for the count + deterministic
-        # hash sample (partition-invariant)
-        from hnsw_spark.operators.levels import uniform_from_id
-
-        probe = base.limit(sample_size + 1).toPandas()
-        if len(probe) > sample_size:
-            n_rows = base.count()
-            frac = min(1.0, sample_size / max(n_rows, 1))
-            sample = base.filter(uniform_from_id(F.col("id"), seed) < frac)
-            probe = sample.limit(sample_size).toPandas()
-        x = np.stack(probe["vector"].to_numpy()).astype(np.float64)
-        centroids = _kmeans_numpy(x, n_lists, seed, max_iter, spherical)
-    else:
-        raise ValueError(f"unknown train_method: {train_method!r}")
-    return centroids
+    """Coarse-quantizer training over a (id, vector) frame → (n_lists, d):
+    seeded k-means (spherical for cosine) on ``training_sample``,
+    driver-side — the FAISS recipe."""
+    x = training_sample(base, sample_size, seed)
+    return _kmeans_numpy(x, n_lists, seed, max_iter, metric == "cosine")
 
 
 def assign_lists(
-    base: DataFrame, centroids: np.ndarray, metric: str, extra_cols: tuple[str, ...] = ()
+    base: DataFrame,
+    centroids: np.ndarray,
+    metric: str,
+    extra_cols: tuple[str, ...] = (),
+    n_probe: int = 1,
 ) -> DataFrame:
-    """Assign every (id, vector[, extra…]) row to its nearest centroid in one
-    vectorized mapInPandas pass → (list_id, id, vector[, extra…])."""
-    spherical = metric == "cosine"
-    bc = base.sparkSession.sparkContext.broadcast(
-        _normalize_rows(centroids) if spherical else centroids
-    )
+    """Assign every (id, vector[, extra…]) row to its ``n_probe`` nearest
+    centroids (``nearest_lists``) in one vectorized mapInPandas pass →
+    (list_id, id, vector[, extra…]), n_probe rows per input row.  One probe
+    is the build assignment; more let ``ivf_self_join`` co-bucket boundary
+    pairs (near-duplicates straddling a centroid boundary) in a shared list
+    and route a query batch too large for the driver."""
+    n_probe = min(n_probe, centroids.shape[0])
+    bc = base.sparkSession.sparkContext.broadcast(centroids)
     extra_schema = "".join(
         f", {name} {base.schema[name].dataType.simpleString()}" for name in extra_cols
     )
@@ -487,70 +494,23 @@ def assign_lists(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.stack(pdf["vector"].to_numpy()).astype(np.float64)
-            if spherical:
-                m = _normalize_rows(m)
-                pred = np.argmax(m @ cents.T, axis=1)
-            else:
-                pred = np.argmin(
-                    (m * m).sum(1, keepdims=True)
-                    - 2.0 * (m @ cents.T)
-                    + (cents * cents).sum(1),
-                    axis=1,
-                )
-            out = {"list_id": pred.astype(np.int32), "id": pdf["id"], "vector": pdf["vector"]}
+            ids = pdf["id"].to_numpy()
+            vecs = pdf["vector"].to_numpy()
+            lists = nearest_lists(
+                _vector_matrix(vecs, ids, "vector"), cents, metric, n_probe
+            )
+            rows = np.repeat(np.arange(len(pdf)), n_probe)
+            out = {
+                "list_id": lists.ravel().astype(np.int32),
+                "id": ids[rows],
+                "vector": vecs[rows],
+            }
             for name in extra_cols:
-                out[name] = pdf[name]
+                out[name] = pdf[name].to_numpy()[rows]
             yield pd.DataFrame(out)
 
     return base.mapInPandas(
         assign, schema=f"list_id int, id long, vector array<float>{extra_schema}"
-    )
-
-
-def multi_probe_assign(
-    base: DataFrame, centroids: np.ndarray, metric: str, n_probe: int
-) -> DataFrame:
-    """Assign every (id, vector) row to its ``n_probe`` nearest centroids in
-    one vectorized mapInPandas pass → (list_id, id, vector), n_probe rows per
-    input row.  The multi-probe generalization of ``assign_lists`` — used by
-    ``ivf_self_join`` so boundary pairs (near-duplicates straddling a
-    centroid boundary) still co-bucket in a shared list."""
-    spherical = metric == "cosine"
-    n_probe = min(n_probe, centroids.shape[0])
-    bc = base.sparkSession.sparkContext.broadcast(
-        _normalize_rows(centroids) if spherical else centroids
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        cents = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["vector"].to_numpy()).astype(np.float64)
-            if spherical:
-                d = -(_normalize_rows(m) @ cents.T)
-            else:
-                d = (
-                    (m * m).sum(1, keepdims=True)
-                    - 2.0 * (m @ cents.T)
-                    + (cents * cents).sum(1)
-                )
-            lists = np.argsort(d, axis=1)[:, :n_probe]  # (n, n_probe)
-            n_rows = len(pdf)
-            rows = np.repeat(np.arange(n_rows), n_probe)
-            yield pd.DataFrame(
-                {
-                    "list_id": lists.ravel().astype(np.int32),
-                    "id": pdf["id"].to_numpy()[rows],
-                    "vector": pdf["vector"].to_numpy()[rows],
-                }
-            )
-
-    return base.mapInPandas(
-        assign, schema="list_id int, id long, vector array<float>"
     )
 
 
@@ -620,7 +580,6 @@ def ivf_self_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    train_method: str = "sample",
     max_list: int | None = 8192,
 ) -> DataFrame:
     """Bucketed self-similarity join: (id_a, id_b, cosine) pairs with
@@ -662,10 +621,8 @@ def ivf_self_join(
     base = df.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vector")
     )
-    centroids = train_centroids(
-        base, n_lists, metric, seed, train_method=train_method
-    )
-    assigned = multi_probe_assign(base, centroids, metric, n_probe)
+    centroids = train_centroids(base, n_lists, metric, seed)
+    assigned = assign_lists(base, centroids, metric, n_probe=n_probe)
 
     empty = pd.DataFrame(
         {
@@ -761,7 +718,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 10,
-    train_method: str = "sample",
     sample_size: int = 65536,
     store: str = "float32",
     pq_m: int = 8,
@@ -793,12 +749,11 @@ def build_ivf_index(
     same plan shape (the coarse q·centroid term is exact and gathered per
     list at search time); on clustered corpora the residual variance is a
     fraction of the raw variance, so agreement-vs-exact at a given m rises
-    sharply (measured: tools/residual_pq_probe.py, bench
-    ``pq_residual_agreement_recorded``).
+    sharply (measured: bench ``pq_residual_agreement_recorded``).
 
     **Sizing ``pq_m`` (the honest serving rule, measured on the two
-    recorded axes — tools/opq_probe.py OPQ sweep and
-    tools/residual_pq_probe.py / bench ``pq_residual_agreement_recorded``):**
+    recorded axes — bench ``pq_adc_agreement_recorded``, the OPQ sweep, and
+    ``pq_residual_agreement_recorded``):**
     ADC-only ranking is trustworthy only at ``m ≥ d/2`` (≤2 dims per
     subspace); below that, serve a ``k·rerank_factor`` shortlist and
     re-rank full-precision via ``search(rerank_with=...)`` — at m=d/8 on
@@ -817,15 +772,12 @@ def build_ivf_index(
     base = df.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vector")
     )
-    centroids = train_centroids(
-        base, n_lists, metric, seed, max_iter, train_method, sample_size
-    )
+    centroids = train_centroids(base, n_lists, metric, seed, max_iter, sample_size)
     assigned = assign_lists(base, centroids, metric)
     params = {
         "n_lists": n_lists,
         "seed": seed,
         "max_iter": max_iter,
-        "train_method": train_method,
         "store": store,
     }
     if store == "int8":

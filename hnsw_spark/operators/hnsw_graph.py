@@ -60,11 +60,15 @@ from pyspark.sql import functions as F
 from hnsw_spark.functions.similarity import get_metric
 from hnsw_spark.operators.ann import (
     _MAX_DRIVER_BATCH,
+    _probe_table,
     assign_lists,
-    route_probes,
     train_centroids,
 )
-from hnsw_spark.operators.knn import _topk_window
+from hnsw_spark.operators.knn import (
+    _topk_window,
+    collect_query_batch,
+    knn_local_merge_prepared,
+)
 from hnsw_spark.operators.levels import select_level
 
 NODE_SCHEMA = (
@@ -649,7 +653,12 @@ class HNSWIndex:
             return spark.createDataFrame([], RESULT_SCHEMA)
         if dispatch not in ("auto", "beam"):
             raise ValueError(f"unknown dispatch mode: {dispatch!r}")
-        if dispatch == "auto":
+        # ONE bounded collect serves both dispatch modes: it sizes the batch,
+        # is the exact route's query transfer and routes the beam, so no
+        # path pays a count or a second toPandas.  An over-cap batch (None)
+        # routes distributed.
+        batch = collect_query_batch(queries, query_id, query_vec, _MAX_DRIVER_BATCH)
+        if dispatch == "auto" and batch is not None:
             n = self.params.get("n_vectors")
             if n is None:
                 # one bounded job, memoized on the instance.  The sizing
@@ -661,38 +670,19 @@ class HNSWIndex:
                 self._own_node_table()
                 n = self.index_df.count()
                 self.params["n_vectors"] = n
-            base_df = self.index_df
-            if "qvec" in base_df.columns:
-                # int8 store: the exact route scores the DEQUANTIZED values
-                # (q·scale in double), the same geometry the graph holds
-                base_df = base_df.withColumn(
-                    "vector",
-                    F.transform(
-                        "qvec", lambda x: x.cast("double") * F.col("scale")
-                    ),
-                )
-            # fused probe: ONE bounded limit+collect both sizes the batch
-            # AND is the exact route's query transfer, so small batches pay
-            # a single extra driver job, not a count + a second toPandas.
-            # Row cap bounds the wasted transfer when a big batch hits a
-            # tiny corpus and falls through to the beam.
-            qcap = min(
-                _EXACT_DISPATCH_CELLS // max(int(n), 1) + 1, _MAX_DRIVER_BATCH
-            )
-            qpd = (
-                queries.select(
-                    F.col(query_id).cast("long").alias("query_id"),
-                    F.col(query_vec).alias("v"),
-                )
-                .limit(qcap + 1)
-                .toPandas()
-            )
-            if len(qpd) <= qcap and len(qpd) * int(n) <= _EXACT_DISPATCH_CELLS:
-                from hnsw_spark.operators.knn import knn_local_merge_prepared
-
+            if len(batch[0]) * int(n) <= _EXACT_DISPATCH_CELLS:
+                base_df = self.index_df
+                if "qvec" in base_df.columns:
+                    # int8 store: the exact route scores the DEQUANTIZED
+                    # values (q·scale in double), the geometry the graph holds
+                    base_df = base_df.withColumn(
+                        "vector",
+                        F.transform(
+                            "qvec", lambda x: x.cast("double") * F.col("scale")
+                        ),
+                    )
                 return knn_local_merge_prepared(
-                    base_df, qpd, k, self.metric,
-                    base_id="id", base_vec="vector", query_vec=query_vec,
+                    base_df, *batch, k, self.metric, base_id="id", base_vec="vector"
                 )
         n_probe = min(n_probe or max(1, self.n_lists // 4), self.n_lists)
         ef = max(
@@ -702,8 +692,8 @@ class HNSWIndex:
             or self.params.get("ef_construction", 100),
         )
         metric = self.metric
-        probes = route_probes(
-            queries, self.centroids, metric, n_probe, query_id, query_vec
+        probes = _probe_table(
+            queries, batch, self.centroids, metric, n_probe, query_id, query_vec
         )
 
         def search_group(
@@ -722,37 +712,42 @@ class HNSWIndex:
             sim = _LocalSim(vecs, metric)
             level_max = int(levels.max())
             n = len(ids)
-            # layer-0 adjacency as a -1-padded positions matrix, mapped
-            # id→row via searchsorted over the (sorted) id column — the
-            # vectorized replacement for the old per-row dict loop
-            lay0 = [
-                row[0] if len(row) else np.empty(0, dtype=np.int64)
-                for row in nodes["neighbors"]
-            ]
-            lens = np.fromiter((len(r) for r in lay0), dtype=np.int64,
-                               count=n)
-            max_deg = int(lens.max()) if n else 0
-            adj_ids = np.full((n, max(max_deg, 1)), -1, dtype=np.int64)
-            if lens.sum():
-                mask = np.arange(max(max_deg, 1)) < lens[:, None]
-                adj_ids[mask] = np.concatenate(
-                    [np.asarray(r, dtype=np.int64) for r in lay0]
-                )
-            posn = np.searchsorted(ids, adj_ids)
-            posn_c = np.clip(posn, 0, n - 1)
-            valid = (adj_ids >= 0) & (ids[posn_c] == adj_ids)
-            adj0 = np.where(valid, posn_c, -1).astype(np.int64)
+            # adjacency arrives as CSR per node (see the cogroup below):
+            # ``nbr_flat`` holds every level's neighbor ids back to back,
+            # ``nbr_lens`` the length of each level.  Ids map to rows via
+            # searchsorted over the (sorted) id column; -1 marks an id not
+            # in this group.
+            row_lens = nodes["nbr_lens"].to_numpy()
+            tot = np.fromiter((len(r) for r in nodes["nbr_flat"]), np.int64, n)
+            flat = (
+                np.concatenate(nodes["nbr_flat"].to_numpy()).astype(np.int64)
+                if tot.sum() else np.empty(0, dtype=np.int64)
+            )
+            fpos = np.clip(np.searchsorted(ids, flat), 0, n - 1)
+            fpos = np.where(ids[fpos] == flat, fpos, -1)
+            start = np.cumsum(tot) - tot
+            # layer-0 adjacency as a -1-padded positions matrix
+            lens0 = np.fromiter(
+                (r[0] if len(r) else 0 for r in row_lens), np.int64, n
+            )
+            width = max(int(lens0.max()), 1)
+            cols = np.arange(width)
+            adj0 = np.full((n, width), -1, dtype=np.int64)
+            mask = cols < lens0[:, None]
+            adj0[mask] = fpos[(start[:, None] + cols)[mask]]
             # upper layers in _greedy_search's nested shape: positions per
             # level for nodes with level >= 1; the level-0 majority shares
             # one empty row, never mutated (descent at level l only stands
             # on level >= l nodes)
             upper: list[list[list[int]]] = [[]] * n
             if level_max > 0:
-                id_to_pos = {int(v): j for j, v in enumerate(ids)}
                 for i in np.nonzero(levels > 0)[0]:
+                    bounds = start[i] + np.concatenate(
+                        ([0], np.cumsum(row_lens[i]))
+                    )
                     upper[i] = [
-                        [id_to_pos[int(x)] for x in lvl if int(x) in id_to_pos]
-                        for lvl in nodes["neighbors"].iloc[int(i)]
+                        [int(p) for p in fpos[lo:hi] if p >= 0]
+                        for lo, hi in zip(bounds[:-1], bounds[1:])
                     ]
             # the persisted build-time entry (final_entry): re-deriving it
             # from id order breaks once incremental inserts interleave ids
@@ -809,10 +804,11 @@ class HNSWIndex:
                 # from the full built node table, whose distinct fallback
                 # re-ran the whole assign + wire chain inside the search
                 # action.  sub_ids = l·STRIDE + 0..n_salts-1 is a SUPERSET
-                # of the physically non-empty sub-lists; empty groups
-                # contribute zero rows (same tolerance as the publish-time
-                # map).  Past the literal cap the distinct fallback keeps
-                # the old shape, mirroring add_points/save_index.
+                # of the physically non-empty sub-lists; their cogroup
+                # groups have no nodes and contribute zero rows (the CSR
+                # neighbors below keep such groups safe).  Past the literal
+                # cap the distinct fallback keeps the old shape, mirroring
+                # add_points/save_index.
                 derived = [
                     int(r["list_id"]) * _SALT_STRIDE + j
                     for r in self._salt_counts.collect()
@@ -859,8 +855,18 @@ class HNSWIndex:
                     "_sub", "sub_id"
                 )
             key = "sub_id"
+        # neighbors cross into Python as CSR (flat ids + per-level sizes):
+        # under PySpark 4.1.2 / pyarrow 16.1.0 a cogroup group that is empty
+        # on the side carrying an array<array<long>> column crashes the
+        # worker in arrow_to_pandas, and probed (sub-)lists with no nodes
+        # are reachable (superset fan-out maps, filtered node tables)
+        nodes = self.index_df.select(
+            *[c for c in self.index_df.columns if c != "neighbors"],
+            F.flatten("neighbors").alias("nbr_flat"),
+            F.transform("neighbors", lambda lvl: F.size(lvl)).alias("nbr_lens"),
+        )
         local = (
-            self.index_df.groupBy(key)
+            nodes.groupBy(key)
             .cogroup(probes.groupBy(key))
             .applyInPandas(search_group, RESULT_SCHEMA)
         )
@@ -1201,7 +1207,6 @@ def build_hnsw_index(
     vec_col: str = "embedding",
     seed: int = 42,
     ef_search: int | None = None,
-    train_method: str = "sample",
     max_level: int | None = None,
     max_list_size: int | None = None,
     store: str = "float32",
@@ -1250,9 +1255,7 @@ def build_hnsw_index(
         F.col(vec_col).alias("vector"),
         lvl.alias("level"),
     )
-    centroids = train_centroids(
-        base.select("id", "vector"), n_lists, metric, seed, train_method=train_method
-    )
+    centroids = train_centroids(base.select("id", "vector"), n_lists, metric, seed)
     assigned = assign_lists(base, centroids, metric, extra_cols=("level",))
     salted = max_list_size is not None
     salt_counts = None
@@ -1288,7 +1291,6 @@ def build_hnsw_index(
             "ef_construction": ef_construction,
             "ef_search": ef_search,
             "seed": seed,
-            "train_method": train_method,
             "max_level": max_level,
             "max_list_size": max_list_size,
             "store": store,

@@ -129,12 +129,29 @@ def knn_exact(
         get_metric(metric)  # raises with the reference's message
     if k <= 0:
         return base.sparkSession.createDataFrame([], _RESULT_SCHEMA)
-    qpd = queries.select(
+    q_ids, qmat = collect_query_batch(queries, query_id, query_vec)
+    return knn_local_merge_prepared(base, q_ids, qmat, k, metric, base_id, base_vec)
+
+
+def collect_query_batch(
+    queries: DataFrame, query_id: str, query_vec: str, cap: int | None = None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The one driver-side transfer of a query batch: (int64 ids, (Q, d)
+    float64 matrix), decoded by ``_vector_matrix``, so a NULL or ragged
+    query vector fails naming ``query_vec`` and its id.  With ``cap`` the
+    collect is bounded to ``cap + 1`` rows and a larger batch returns None
+    — the caller routes it distributed instead.  An empty batch is a (0,)
+    id array and a (0, 0) matrix."""
+    q = queries.select(
         F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("v")
-    ).toPandas()
-    return knn_local_merge_prepared(
-        base, qpd, k, metric, base_id, base_vec, query_vec=query_vec
     )
+    pdf = (q if cap is None else q.limit(cap + 1)).toPandas()
+    if cap is not None and len(pdf) > cap:
+        return None
+    ids = pdf["query_id"].to_numpy(dtype=np.int64)
+    if not len(ids):
+        return ids, np.empty((0, 0))
+    return ids, _vector_matrix(pdf["v"].to_numpy(), ids, query_vec)
 
 
 def _vector_matrix(vecs: np.ndarray, ids: np.ndarray, column: str) -> np.ndarray:
@@ -219,24 +236,20 @@ def _batch_topk(
 
 def knn_local_merge_prepared(
     base: DataFrame,
-    qpd: pd.DataFrame,
+    q_ids: np.ndarray,
+    qmat: np.ndarray,
     k: int,
     metric: str,
     base_id: str = "vec_id",
     base_vec: str = "embedding",
-    query_vec: str = "embedding",
 ) -> DataFrame:
-    """``local_merge`` over an ALREADY-COLLECTED query batch (pandas columns
-    ``query_id``, ``v``) — callers that had to materialize the batch anyway
-    (the ANN auto-dispatch probe bounds it with a limit+collect) reuse that
-    one driver transfer instead of paying a second toPandas job.
-    ``query_vec`` names the batch's source column in the NULL/ragged-vector
-    error."""
+    """``local_merge`` over a query batch already collected by
+    ``collect_query_batch`` (ids and matrix) — ``knn_exact`` and the HNSW
+    auto-dispatch probe, which bounds the batch with a limit+collect, each
+    pay one driver transfer and no second toPandas job."""
     spark = base.sparkSession
-    if qpd.empty:  # np.stack rejects an empty batch
+    if not len(q_ids):
         return spark.createDataFrame([], _RESULT_SCHEMA)
-    q_ids = qpd["query_id"].to_numpy()
-    qmat = _vector_matrix(qpd["v"].to_numpy(), q_ids, query_vec)
     bq = spark.sparkContext.broadcast((q_ids, qmat))
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

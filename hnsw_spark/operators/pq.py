@@ -8,8 +8,8 @@ Search", TPAMI 2011 — the FAISS ``IVFPQ`` shape):
 
 - **Train**: split the dimension into ``m`` subspaces; per subspace, k-means
   with ``2^nbits`` centers over a bounded driver-side training sample (the
-  same deterministic hash-sample recipe as the IVF coarse quantizer,
-  operators/ann.py:train_centroids — sample size is fixed, so training cost
+  same deterministic hash sample as the IVF coarse quantizer,
+  operators/ann.py:training_sample — sample size is fixed, so training cost
   is corpus-size-independent).
 - **Encode**: one vectorized mapInPandas pass; each vector becomes ``m``
   uint8 code indices packed into a BINARY column (Arrow/parquet-friendly;
@@ -31,12 +31,12 @@ lossy by design); quality is gated the reference's own way — recall@k vs
 the exact operator (bench/README.md:108) — via the ``ann_ivfpq_recall``
 registered query and the pinned tests.
 
-Sizing m (VERDICT r10 #5, adjudicated by measurement — tools/opq_probe.py
-and the ``adc_agreement_by_m`` bench axis): ADC-ONLY serving needs
-``m >= d/2`` at 8-bit codes (top-10 agreement vs exact = 0.55 / 0.725 /
-0.925 at m = 8 / 16 / 32 on the 64-dim fixture — the committed
-``adc_agreement_by_m`` axis); for smaller m the
-ADC pass is a SHORTLIST, not a ranking — always pair it with
+Sizing m (VERDICT r10 #5, adjudicated by measurement — bench
+``pq_adc_agreement_recorded`` and the ``adc_agreement_by_m`` bench axis):
+ADC-ONLY serving needs ``m >= d/2`` at 8-bit codes (top-10 agreement vs
+exact = 0.55 / 0.725 / 0.925 at m = 8 / 16 / 32 on the 64-dim fixture —
+the committed ``adc_agreement_by_m`` axis); for smaller m the ADC pass is
+a SHORTLIST, not a ranking — always pair it with
 ``rerank_with`` (agreement 1.0 at ~2× wall).  There is deliberately no
 OPQ rotation knob: both the parametric (Ge et al., CVPR 2013) and the
 iterative-Procrustes rotations were measured to improve reconstruction
@@ -52,8 +52,9 @@ instead of x, and add the exact q·centroid term back during ADC.  A
 rotation re-shapes the variance; the residual REMOVES the part the
 coarse quantizer already explains, so when n_lists resolves the corpus's
 cluster structure the same m bytes quantize a much smaller signal
-(measured: tools/residual_pq_probe.py and the pinned clustered test —
-full-probe recall 0.735 → 0.870 at m=8 on the 128-cluster fixture;
+(measured: bench ``pq_residual_agreement_recorded`` and the pinned
+clustered test — full-probe recall 0.735 → 0.870 at m=8 on the
+128-cluster fixture;
 a wash when n_lists ≪ cluster count, slightly NEGATIVE on uniform
 corpora, hence default off).
 """
@@ -64,22 +65,20 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_spark.operators.ann import _kmeans_numpy, _normalize_rows
+from hnsw_spark.operators.ann import (
+    _kmeans_numpy,
+    _normalize_rows,
+    nearest_lists,
+    training_sample,
+)
 
 
 def _residual_cents(centroids: np.ndarray) -> np.ndarray:
     """The ONE centroid matrix every residual-PQ site (train subtraction,
     encode subtraction, ADC coarse term) must share: normalized rows, the
-    same convention ``assign_lists`` routes by for cosine — a different
+    same convention ``nearest_lists`` routes by for cosine — a different
     matrix at any site would silently skew every score."""
     return _normalize_rows(np.asarray(centroids, dtype=np.float64))
-
-
-def _assign_rows(x: np.ndarray, centroids: np.ndarray) -> np.ndarray:
-    """Nearest coarse centroid per row (cosine convention: max dot of
-    normalized rows against normalized centroids — matches
-    operators/ann.assign_lists)."""
-    return np.argmax(x @ centroids.T, axis=1)
 
 
 def train_pq_codebooks(
@@ -110,36 +109,27 @@ def train_pq_codebooks(
     bottleneck the OPQ probe showed rotations cannot move.  The codebooks
     are shared across lists (standard IVFADC), so ADC search still builds
     ONE table per query plus a per-list additive constant."""
-    from hnsw_spark.operators.levels import uniform_from_id
-
     if centroids is not None and metric != "cosine":
         raise ValueError(
-            "residual PQ training requires metric='cosine': _assign_rows "
-            f"routes by the cosine convention (got {metric!r}); mirror of "
-            "adc_score's early rejection"
+            "residual PQ training requires metric='cosine': residuals are "
+            f"taken against normalized centroids (got {metric!r}); mirror "
+            "of adc_score's early rejection"
         )
     ksub = 1 << nbits
-    probe = base.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vector")
+    raw = training_sample(
+        base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")),
+        sample_size,
+        seed,
     )
-    pdf = probe.limit(sample_size + 1).toPandas()
-    if len(pdf) > sample_size:
-        n_rows = base.count()
-        frac = min(1.0, sample_size / max(n_rows, 1))
-        pdf = (
-            probe.filter(uniform_from_id(F.col("id"), seed) < frac)
-            .limit(sample_size)
-            .toPandas()
-        )
-    x = np.stack(pdf["vector"].to_numpy()).astype(np.float64)
-    d = x.shape[1]
+    d = raw.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible into m={m} subspaces")
-    if metric == "cosine":
-        x = _normalize_rows(x)
+    x = _normalize_rows(raw) if metric == "cosine" else raw
     if centroids is not None:
-        cents = _residual_cents(centroids)
-        x = x - cents[_assign_rows(x, cents)]
+        # nearest_lists normalizes ``raw`` exactly as above, so each row's
+        # residual is taken against the list assign_lists gives it
+        lists = nearest_lists(raw, centroids, metric)[:, 0]
+        x = x - _residual_cents(centroids)[lists]
     dsub = d // m
     books = []
     for j in range(m):

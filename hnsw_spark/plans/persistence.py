@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -27,10 +28,33 @@ from hnsw_spark.operators.ann import IVFIndex
 
 def save_index(index, path: str) -> None:
     """Persist an IVFIndex or HNSWIndex: node table partitioned by list_id
-    (probe-time partition pruning) + params sidecar with a ``kind`` tag."""
+    (probe-time partition pruning) + params sidecar with a ``kind`` tag.
+
+    The sidecar is the commit marker: an existing one is removed before the
+    node table is overwritten, and the new one is written under a temporary
+    name and renamed into place last.  A crash in between leaves no sidecar,
+    so ``load_index`` reports the index absent instead of pairing the new
+    nodes with stale centroids, ``n_vectors`` or ``sub_ids``.
+
+    A node table that still reads from ``path/nodes`` (a loaded index,
+    grown but not checkpointed or cached) is refused up front with a
+    ``ValueError``: Spark's overwrite would delete the files it reads, and
+    the old index would be lost with the failed write."""
     from hnsw_spark.operators.hnsw_graph import HNSWIndex
 
     nodes = os.path.join(path, "nodes")
+    sidecar = os.path.join(path, "params.json")
+    root = os.path.abspath(nodes) + os.sep
+    if any(
+        os.path.abspath(unquote(urlparse(f).path)).startswith(root)
+        for f in index.index_df.inputFiles()
+    ):
+        raise ValueError(
+            f"cannot save over {path}: the node table reads from {nodes}; "
+            "localCheckpoint() or cache it first"
+        )
+    if os.path.exists(sidecar):
+        os.remove(sidecar)
     index.index_df.write.mode("overwrite").partitionBy("list_id").parquet(nodes)
     params = {
         "kind": "hnsw" if isinstance(index, HNSWIndex) else "ivf",
@@ -76,8 +100,10 @@ def save_index(index, path: str) -> None:
         # (hnsw_graph.HNSWIndex.search sizing memo).
         spark = index.index_df.sparkSession
         params["n_vectors"] = spark.read.parquet(nodes).count()
-    with open(os.path.join(path, "params.json"), "w") as f:
+    tmp = sidecar + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(params, f)
+    os.replace(tmp, sidecar)
 
 
 def load_index(spark: SparkSession, path: str):

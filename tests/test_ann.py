@@ -69,6 +69,16 @@ def test_persistence_roundtrip(spark, corpus, queries, tmp_path):
         (r.query_id, r.id) for r in loaded.search(queries, k=5, n_probe=8).collect()
     }
     assert before == after
+    # a sidecar written before train_method was removed still loads
+    import json
+    import os
+
+    sidecar = os.path.join(path, "params.json")
+    with open(sidecar) as f:
+        params = json.load(f)
+    with open(sidecar, "w") as f:
+        json.dump({**params, "train_method": "sample"}, f)
+    assert load_index(spark, path).n_lists == 8
     # delete → load-if-exists returns None (silent-miss, src/db.ts:72-74)
     delete_index(path)
     assert load_index(spark, path) is None
@@ -81,6 +91,115 @@ def test_save_is_whole_index_overwrite(spark, corpus, tmp_path):
     loaded = load_index(spark, path)
     assert loaded.n_lists == 4
     assert loaded.index_df.count() == 2000  # second save fully replaced the first
+
+
+def test_save_crash_between_nodes_and_sidecar_leaves_no_stale_index(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """Overwriting an index rewrites nodes/ first and the params sidecar
+    last.  A crash in between must not leave the OLD sidecar (centroids,
+    n_lists, n_vectors) beside the NEW nodes: load_index reports the index
+    absent instead."""
+    import os
+
+    from hnsw_spark.plans import persistence
+
+    path = str(tmp_path / "crash")
+    save_index(build_ivf_index(corpus, n_lists=4), path)
+    small = build_ivf_index(corpus.filter(F.col("vec_id") < 100), n_lists=2)
+
+    def crash(*a, **kw):
+        raise OSError("injected crash before the sidecar write")
+
+    monkeypatch.setattr(persistence, "open", crash, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        save_index(small, path)
+    monkeypatch.undo()
+    assert load_index(spark, path) is None
+    save_index(small, path)  # a retried save publishes the new index
+    loaded = load_index(spark, path)
+    assert loaded.n_lists == 2 and loaded.params["n_vectors"] == 100
+    assert sorted(os.listdir(path)) == ["nodes", "params.json"]
+
+
+def test_save_over_own_source_path_refuses_and_keeps_old_index(
+    spark, corpus, tmp_path
+):
+    """A loaded index whose node table still reads from ``path/nodes`` cannot
+    be saved back over it: Spark's overwrite would delete the files it is
+    reading.  save_index refuses before touching anything, and the saved
+    index stays loadable."""
+    path = str(tmp_path / "self")
+    save_index(build_ivf_index(corpus, n_lists=4), path)
+    loaded = load_index(spark, path)
+    with pytest.raises(ValueError, match="reads from"):
+        save_index(loaded, path)
+    again = load_index(spark, path)
+    assert again.n_lists == 4 and again.index_df.count() == 2000
+
+
+@pytest.mark.parametrize("width", [64, 256])
+@pytest.mark.parametrize("metric", ["cosine", "euclidean"])
+def test_nearest_lists_breaks_ties_by_lowest_list_id(metric, width):
+    """Duplicate centroids tie exactly; every probe count must take them in
+    ascending list id, so assignment (one probe) and routing (any number)
+    agree.  numpy's default argsort is unstable and does not."""
+    import numpy as np
+
+    from hnsw_spark.operators.ann import nearest_lists
+
+    rng = np.random.default_rng(width)
+    distinct = rng.normal(size=(8, 16))
+    owner = rng.permutation(np.arange(width) % 8)  # centroid -> its vector
+    cents = distinct[owner]
+    q = distinct[np.arange(40) % 8]
+    want = np.stack([np.flatnonzero(owner == i % 8) for i in range(40)])
+    assert (nearest_lists(q, cents, metric) == want[:, :1]).all()
+    for n_probe in (2, 5, width // 8):
+        assert (nearest_lists(q, cents, metric, n_probe) == want[:, :n_probe]).all()
+
+
+def _duplicate_heavy_corpus(spark):
+    """8 distinct 16-d vectors × 40 copies: into 256 lists, k-means returns
+    duplicate centroids."""
+    import numpy as np
+
+    distinct = np.random.default_rng(3).normal(size=(8, 16)).astype(np.float32)
+    rows = [(i, distinct[i % 8].tolist()) for i in range(320)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
+
+
+def test_duplicate_heavy_corpus_routes_queries_to_their_copies(spark):
+    """A query must probe the list its own copies were assigned to: one
+    IVF probe yields k rows, all its copies, and the HNSW beam answers
+    every query from its copies too."""
+    from hnsw_spark.operators.hnsw_graph import build_hnsw_index
+
+    df = _duplicate_heavy_corpus(spark)
+    ivf = build_ivf_index(df, n_lists=256)
+    got = ivf.search(df, k=10, n_probe=1).collect()
+    assert len(got) == 3200
+    assert all(r.query_id % 8 == r.id % 8 for r in got)
+    hnsw = build_hnsw_index(df, n_lists=256, m=8, ef_construction=32)
+    beam = hnsw.search(df, k=10, n_probe=1, ef_search=64, dispatch="beam")
+    got = beam.collect()
+    assert {r.query_id for r in got} == set(range(320))
+    assert all(r.query_id % 8 == r.id % 8 for r in got)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="the build's diversity pruning (_select_neighbors via _connect) "
+    "leaves some exact clones without layer-0 edges, so the beam cannot "
+    "reach k of a query's 40 copies",
+)
+def test_duplicate_heavy_corpus_hnsw_beam_returns_k_rows(spark):
+    from hnsw_spark.operators.hnsw_graph import build_hnsw_index
+
+    df = _duplicate_heavy_corpus(spark)
+    hnsw = build_hnsw_index(df, n_lists=256, m=8, ef_construction=32)
+    beam = hnsw.search(df, k=10, n_probe=1, ef_search=64, dispatch="beam")
+    assert len(beam.collect()) == 3200
 
 
 def test_route_probes_distributed_matches_driver_path(spark, monkeypatch):
@@ -223,7 +342,8 @@ def test_pq_rejects_euclidean_and_indivisible_dim(spark, corpus):
 
 
 def test_residual_pq_rejects_non_cosine_direct_calls(spark, corpus):
-    """ADVICE r12 #2: _assign_rows routes by the cosine convention, so a
+    """ADVICE r12 #2: residual PQ takes residuals against normalized
+    centroids (the cosine convention), so a
     DIRECT train/encode call with centroids + metric='euclidean' would
     silently assign residuals with the wrong nearest-centroid rule (no
     shipped path hits this — adc_score and build_ivf_index are already
@@ -281,8 +401,8 @@ def test_pq_residual_full_probe_rerank_and_persistence(
 
 
 def test_pq_residual_beats_plain_on_clustered(spark, clustered):
-    """The measured IVFADC claim (tools/residual_pq_probe.py): when the
-    coarse quantizer RESOLVES the cluster structure (n_lists ≳ the
+    """The measured IVFADC claim (bench ``pq_residual_agreement_recorded``):
+    when the coarse quantizer RESOLVES the cluster structure (n_lists ≳ the
     corpus's cluster count — here 128 lists over the generator's 128
     hashed centers), the centroid absorbs the between-cluster variance
     and the same m bytes quantize only the ±0.15 jitter — full-probe ADC

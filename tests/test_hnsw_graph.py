@@ -869,6 +869,14 @@ def test_crossover_aware_dispatch(spark, embeddings, monkeypatch):
     monkeypatch.setattr(hg, "_EXACT_DISPATCH_CELLS", 0)
     beam = idx.search(qs, k=10, n_probe=4, ef_search=64)
     assert "CoGroup" in plan_of(beam)
+    # a one-query batch fits the probe's row cap but not the budget: the
+    # beam routes the batch the probe collected, with the forced beam's rows
+    one = embeddings.filter(F.col("vec_id") == 3)
+    via_probe = idx.search(one, k=10, n_probe=4, ef_search=64)
+    assert "CoGroup" in plan_of(via_probe)
+    assert sorted(via_probe.collect()) == sorted(
+        idx.search(one, k=10, n_probe=4, ef_search=64, dispatch="beam").collect()
+    )
     # forced modes override the budget in both directions
     monkeypatch.setattr(hg, "_EXACT_DISPATCH_CELLS", 1 << 40)
     assert "CoGroup" in plan_of(
@@ -1101,3 +1109,94 @@ def test_salted_fresh_build_counts_map_parity(spark, embeddings):
         for r in knn_exact(allv, qs, k=10, metric="cosine").collect()
     }
     assert pairs(grown) == exact_grown
+
+
+def test_salted_fresh_index_with_empty_sub_lists_matches_saved_copy(
+    spark, tmp_path
+):
+    """A fresh salted index fans probes out over ``_salt_counts``, a
+    superset of the physical sub-lists, so the search cogroup meets groups
+    with no nodes.  The search must not crash on them and must return the
+    rows of the saved-and-loaded copy, whose map lists only physical
+    sub-lists."""
+    from hnsw_spark.operators.hnsw_graph import _SALT_STRIDE
+    from hnsw_spark.plans.persistence import load_index, save_index
+    from hnsw_spark.sources.synthetic import synthetic_vectors
+
+    df = synthetic_vectors(spark, 400, 16, seed=7).cache()
+    fresh = build_hnsw_index(
+        df, n_lists=8, m=8, ef_construction=32, max_list_size=2
+    )
+    derived = {
+        int(r["list_id"]) * _SALT_STRIDE + j
+        for r in fresh._salt_counts.collect()
+        for j in range(int(r["_n_salts"]))
+    }
+    path = str(tmp_path / "salted")
+    save_index(fresh, path)
+    loaded = load_index(spark, path)
+    assert set(loaded.params["sub_ids"]) < derived  # empty sub-lists probed
+    qs = df.filter(F.col("vec_id") < 12)
+
+    def rows(idx):
+        return sorted(
+            (r.query_id, r.id, r.score)
+            for r in idx.search(
+                qs, k=10, n_probe=8, ef_search=64, dispatch="beam"
+            ).collect()
+        )
+
+    got = rows(fresh)
+    assert len(got) == 120 and got == rows(loaded)
+
+
+def test_search_with_a_probed_list_missing_from_the_node_table(
+    spark, embeddings
+):
+    """A node table with one list filtered out, searched at full probe: the
+    probed list's cogroup group has no nodes and contributes no rows; the
+    other lists still answer, equal to exact kNN over the remaining nodes."""
+    from hnsw_spark.operators.hnsw_graph import HNSWIndex
+
+    base = embeddings.filter(F.col("vec_id") < 300)
+    built = build_hnsw_index(base, n_lists=4, m=8, ef_construction=32, max_level=0)
+    kept = built.index_df.filter(F.col("list_id") != 2)
+    idx = HNSWIndex(kept, built.centroids, built.metric, dict(built.params))
+    qs = embeddings.filter(F.col("vec_id") < 6)
+    got = {
+        (r.query_id, r.id)
+        for r in idx.search(
+            qs, k=10, n_probe=4, ef_search=1 << 20, dispatch="beam"
+        ).collect()
+    }
+    remaining = base.join(kept.select(F.col("id").alias("vec_id")), "vec_id")
+    assert got == {
+        (r.query_id, r.id)
+        for r in knn_window(remaining, qs, k=10, metric="cosine").collect()
+    }
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="PySpark 4.1.2 / pyarrow 16.1.0: arrow_to_pandas crashes the "
+    "Python worker on a cogroup group that is empty on the side carrying "
+    "an array<array<long>> column; HNSWIndex.search ships neighbors as "
+    "CSR because of it.  An engine that fixes the crash makes this pass.",
+)
+def test_engine_cogroup_empty_side_with_nested_array_column(spark):
+    import pandas as pd
+
+    nodes = spark.createDataFrame(
+        [(0, [[1, 2], [3]]), (0, [[4]])], "k int, nbrs array<array<long>>"
+    )
+    probes = spark.createDataFrame([(0, 1), (1, 2)], "k int, q int")
+
+    def count(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"a": [len(a)], "b": [len(b)]})
+
+    got = (
+        nodes.groupBy("k").cogroup(probes.groupBy("k"))
+        .applyInPandas(count, "a long, b long")
+        .collect()
+    )
+    assert sorted((r.a, r.b) for r in got) == [(0, 1), (2, 1)]

@@ -187,6 +187,38 @@ def test_knn_exact_names_null_and_ragged_vectors(spark):
             run(spark.createDataFrame(good, schema), rows)
 
 
+@pytest.mark.parametrize(
+    "path", ["ivf_float32", "ivf_int8", "hnsw_beam"]
+)
+def test_search_paths_name_null_and_ragged_query_vectors(spark, path):
+    """The ANN search paths collect the query batch through the same
+    decode as knn_exact, so a NULL or wrong-length query vector fails with
+    its column and id named, not numpy's bare shape message."""
+    from hnsw_spark.operators.ann import build_ivf_index
+    from hnsw_spark.operators.hnsw_graph import build_hnsw_index
+
+    schema = "vec_id long, emb array<double>"
+    good = [(i, [1.0, float(i)]) for i in range(6)]
+    corpus = spark.createDataFrame(good, schema)
+    if path == "hnsw_beam":
+        index = build_hnsw_index(
+            corpus, n_lists=2, m=4, ef_construction=8, vec_col="emb"
+        )
+        kw = {"dispatch": "beam"}
+    else:
+        index = build_ivf_index(
+            corpus, n_lists=2, vec_col="emb", store=path.split("_")[1]
+        )
+        kw = {}
+    for bad, msg in (
+        ((7, None), r"'emb' is NULL at id 7"),
+        ((7, [1.0, 2.0, 3.0]), r"'emb' has length 3 at id 7 but 2 at id 0"),
+    ):
+        queries = spark.createDataFrame(good[:1] + [bad], schema).coalesce(1)
+        with pytest.raises(ValueError, match=msg):
+            index.search(queries, k=3, query_vec="emb", **kw).collect()
+
+
 def test_local_topk_keeps_lowest_ids_among_tied_scores():
     """The per-batch top-k must pick tied k-th scores by ascending id (the
     global merge's order); argpartition alone picks among them arbitrarily,

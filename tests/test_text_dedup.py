@@ -245,8 +245,8 @@ def test_ivf_self_join_skew_guard_bounds_tasks_and_preserves_pairs(spark):
     tasks whose union scores exactly the same pair set (VERDICT r2 #7)."""
     from hnsw_spark.operators.ann import (
         _salt_oversized_lists,
+        assign_lists,
         ivf_self_join,
-        multi_probe_assign,
         train_centroids,
     )
 
@@ -272,7 +272,7 @@ def test_ivf_self_join_skew_guard_bounds_tasks_and_preserves_pairs(spark):
         F.col("embedding").alias("vector"),
     )
     cents = train_centroids(base, 2, "cosine", 42)
-    assigned = multi_probe_assign(base, cents, "cosine", 2)
+    assigned = assign_lists(base, cents, "cosine", n_probe=2)
     sizes = (
         _salt_oversized_lists(assigned, 8)
         .groupBy("list_id", "ca", "cb")
